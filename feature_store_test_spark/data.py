@@ -336,39 +336,40 @@ def local_rows_df(spark: SparkSession, rows, schema) -> DataFrame:
 
     ``spark.createDataFrame(<python list>)`` parallelizes the rows into a
     Python RDD: every EXECUTION of the resulting plan then round-trips
-    through a Python worker — measured ~5.9s per run for a 200-row table
-    on this box (q150's whole exec cost was that one scan; the PQ LUT
-    and IVF-centroid relations paid it inside q103/q104's timed windows
-    too) — and the relation is opaque to Catalyst (no local-relation
-    stats). Routing the same rows through pandas + Arrow yields a plain
-    ``LocalTableScan``: pure JVM at execution time (0.079s for the same
-    table), identical values, schema honored as declared. Use this for
+    through a Python worker, and the relation is opaque to Catalyst (no
+    local-relation stats). An Arrow table handed to ``createDataFrame``
+    becomes a plain ``LocalTableScan`` instead: pure JVM at execution
+    time, identical values, schema honored as declared. Use this for
     every driver-built literal table on a query path; plain
     ``createDataFrame`` stays fine for test fixtures.
-    """
-    import pandas as pd
 
+    Each Arrow column is built with the type the schema declares, so
+    empty tables and all-NULL columns convert like any other. The Arrow
+    table path reads no session conf (the pandas path needs
+    ``spark.sql.execution.arrow.pyspark.enabled`` and skips Arrow for zero
+    rows), so the session is left untouched.
+    """
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_type
 
     if isinstance(schema, str):
         schema = T._parse_datatype_string(schema)
-    # The LocalTableScan depends on the Arrow conversion path, which is a
-    # RUNTIME conf a vanilla (driver-built) session does not set — without
-    # it every one of these literal tables silently took the Python-RDD
-    # path in the driver's own verify sessions (found by the guard below,
-    # round 11). Set it at the single choke point.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    cols = [f.name for f in schema.fields]
-    # rows normalized to plain tuples (ADVICE r10): Row objects (e.g. a
-    # report.collect()) expand POSITIONALLY here — tuple() pins that
-    # explicitly and keeps pandas from treating a Row as a scalar cell.
-    pdf = pd.DataFrame([tuple(r) for r in rows], columns=cols, dtype=object)
-    df = spark.createDataFrame(pdf, schema=schema)
-    # The LocalTableScan win depends on the Arrow conversion path; the
-    # default fallback silently reinstates the Python-RDD regression with
-    # only a warning (ADVICE r10). A LogicalRDD here is that regression —
-    # fail loudly. Checked on the ANALYZED plan (no optimizer run).
-    if "LogicalRDD" in df._jdf.queryExecution().analyzed().nodeName():
+    # Row objects (e.g. a report.collect()) expand POSITIONALLY
+    rows = [tuple(r) for r in rows]
+    table = pa.Table.from_arrays(
+        [
+            pa.array([r[i] for r in rows], type=to_arrow_type(f.dataType))
+            for i, f in enumerate(schema.fields)
+        ],
+        names=schema.fieldNames(),
+    )
+    df = spark.createDataFrame(table, schema=schema)
+    # A LogicalRDD leaf anywhere in the analyzed plan means the rows took
+    # the Python-RDD path after all — fail loudly rather than re-pay a
+    # Python worker round trip on every execution.
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    if any(leaves.apply(i).nodeName() == "LogicalRDD" for i in range(leaves.size())):
         raise RuntimeError(
             "local_rows_df: Arrow conversion fell back to a Python RDD scan"
             " — the driver-literal table would re-pay a Python worker"

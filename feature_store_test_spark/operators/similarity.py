@@ -266,6 +266,15 @@ def _hyperplane_coefs(n_planes: int, dim: int) -> list[list[float]]:
     ]
 
 
+def _sql_name(col: str | Column) -> str | None:
+    """Backtick-quoted SQL form of a plain column name; None for a Column
+    or for a name only ``F.col`` parses right (qualified ``"t.c"``, or one
+    holding a backtick)."""
+    if isinstance(col, str) and "." not in col and "`" not in col:
+        return f"`{col}`"
+    return None
+
+
 def lsh_bucket(vec_col: str | Column, n_planes: int, dim: int) -> Column:
     """Random-hyperplane bucket id: one sign bit per plane, as a bit string.
 
@@ -278,10 +287,10 @@ def lsh_bucket(vec_col: str | Column, n_planes: int, dim: int) -> Column:
     # call (~0.3s of q38's fn); one F.expr parse builds the IDENTICAL
     # expression tree (repr round-trips doubles exactly), execution
     # unchanged.
-    v_sql = f"`{vec_col}`" if isinstance(vec_col, str) else None
+    v_sql = _sql_name(vec_col)
     if v_sql is None:
-        # Column input: keep the API form (no SQL name to splice)
-        v = vec_col
+        # no plain name to splice: keep the API form
+        v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
         coefs = _hyperplane_coefs(n_planes, dim)
         bits = []
         for plane in coefs:
@@ -345,9 +354,9 @@ def _grid_cells(
     # can admit or the output would depend on the oversize routing in
     # that half-ulp band (exact plan-split contract).
     eps = math.sqrt(max(2.0 * (1.0 - (threshold - 5e-7)), 1e-12))
-    if isinstance(vec_col, str):
+    v_sql = _sql_name(vec_col)
+    if v_sql is not None:
         # single-parse SQL form — same rationale as lsh_bucket (round 11)
-        v_sql = f"`{vec_col}`"
         nrm_sql = (
             f"sqrt(aggregate({v_sql}, 0D, (acc, x) -> acc"
             " + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
@@ -1227,14 +1236,6 @@ def _pq_fit(
             cents = new
         codebooks.append([[float(x) for x in c] for c in cents])
     return codebooks
-
-
-def _sq_l2(a: Column, centroid: list[float]) -> Column:
-    """Squared L2 distance between an array column and a literal centroid
-    (ordered zip_with fold — deterministic double accumulation)."""
-    lit = F.array(*[F.lit(float(x)) for x in centroid])
-    diffs = F.zip_with(a, lit, lambda x, y: (x.cast("double") - y) * (x.cast("double") - y))
-    return F.aggregate(diffs, F.lit(0.0), lambda acc, x: acc + x)
 
 
 def pq_encode(

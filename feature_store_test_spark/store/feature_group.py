@@ -120,6 +120,18 @@ class FeatureGroup:
         )
 
     # -- online store -------------------------------------------------------
+    def _latest(self, hist: DataFrame, strict_event_time: bool) -> DataFrame:
+        """Latest record per key of ``hist``: last ARRIVAL wins (commit
+        sequence, then event time) in parity mode, last EVENT TIME in
+        strict mode. The aggregation form ships one map-side max_by
+        candidate per key and partition across the shuffle, not every
+        version."""
+        if strict_event_time:
+            max_of = [self.event_time_col, "_commit_version"]
+        else:
+            max_of = ["_commit_version", self.event_time_col]
+        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+
     def online_view(self, strict_event_time: bool = False) -> DataFrame:
         """Latest record per key.
 
@@ -128,15 +140,7 @@ class FeatureGroup:
         including its retry-out-of-order quirk (§2.13 Q5).
         strict mode: last-EVENT-TIME wins regardless of arrival.
         """
-        hist = self.offline_history()
-        if strict_event_time:
-            max_of = [self.event_time_col, "_commit_version"]
-        else:
-            max_of = ["_commit_version", self.event_time_col]
-        # aggregation form: map-side partial max_by → one candidate row per
-        # key per partition crosses the shuffle (vs every version for the
-        # ranking-window form)
-        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+        return self._latest(self.offline_history(), strict_event_time)
 
     def exists_batch(self, keys: DataFrame) -> DataFrame:
         """Which of the given keys have a stored record (left semi join) —
@@ -147,39 +151,74 @@ class FeatureGroup:
             how="left_semi",
         )
 
-    def _key_slice_latest(self, key_value, strict_event_time: bool = False) -> DataFrame:
-        """Latest record for ONE key via the stats-pruned read path: the
+    def _key_slice(self, key_value) -> DataFrame:
+        """History rows of ONE key via the stats-pruned read path: the
         table's per-file min/max skips every file whose key range excludes
         the key, so after compact(cluster_by=[key]) a point read lists ~1
-        file instead of scanning the table. Latest-per-key over only this
-        key's rows is identical to filtering the full online view."""
-        hist = self.table.read(where=[(self.key_col, "=", key_value)])
-        if strict_event_time:
-            max_of = [self.event_time_col, "_commit_version"]
-        else:
-            max_of = ["_commit_version", self.event_time_col]
-        return latest_per_key_agg(hist, self.key_col, max_of).drop("_commit_version")
+        file instead of scanning the table."""
+        return self.table.read(where=[(self.key_col, "=", key_value)])
 
     def exists(self, key_value) -> bool:
-        return (
-            self.table.read(where=[(self.key_col, "=", key_value)])
-            .limit(1)
-            .count()
-            > 0
-        )
+        return self._key_slice(key_value).limit(1).count() > 0
 
     def get_latest(self, key_value) -> dict | None:
         """Point read of the latest record (get_latest_features :184-204).
 
-        Stats-pruned key-slice scan (see _key_slice_latest); at serving
-        scale the residual is cached / key-clustered (documented scope:
-        micro-batch freshness, like the reference outsourcing ms-latency
-        serving to AWS).
+        Latest-per-key over the stats-pruned key slice, identical to
+        filtering the full online view; at serving scale the residual is
+        cached / key-clustered (documented scope: micro-batch freshness,
+        like the reference outsourcing ms-latency serving to AWS).
         """
-        rows = self._key_slice_latest(key_value).collect()
+        rows = self._latest(self._key_slice(key_value), False).collect()
         return rows[0].asDict() if rows else None
 
     # -- upsert (the feature-store core) ------------------------------------
+    def _merged_rows(
+        self,
+        source: DataFrame,
+        when_matched: dict[str, F.Column] | None,
+        when_not_matched: dict[str, F.Column] | None,
+        dup_error: str,
+    ) -> DataFrame:
+        """The new version rows of a MERGE of ``source`` (aliased ``s``)
+        into the online view (aliased ``t``); see ``merge``.
+
+        One source row per key is a hard precondition: two rows for the
+        same key would both apply against the SAME stored state, where the
+        rule needs sequential application (the streaming pipeline's
+        per-key fold)."""
+        dup = (
+            source.groupBy(self.key_col).count().where(F.col("count") > 1).limit(1).count()
+        )
+        if dup:
+            raise ValueError(dup_error)
+        t = self.online_view().alias("t")
+        joined = source.alias("s").join(t, on=self.key_col, how="left")
+        matched = F.col(f"t.{self.event_time_col}").isNotNull()
+        if when_matched is None:
+            joined = joined.where(~matched)
+        if when_not_matched is None:
+            joined = joined.where(matched)
+
+        out_cols = []
+        for f in self.schema.fields:
+            c = f.name
+            if c == self.key_col:
+                out_cols.append(F.col(f"s.{self.key_col}").alias(c))
+                continue
+            m_expr = (when_matched or {}).get(c)
+            if m_expr is None:
+                m_expr = F.col(f"t.{c}")
+            i_expr = (when_not_matched or {}).get(c)
+            if i_expr is None:
+                i_expr = (
+                    F.col(f"s.{c}")
+                    if c in source.columns
+                    else F.lit(None).cast(f.dataType)
+                )
+            out_cols.append(F.when(matched, m_expr).otherwise(i_expr).alias(c))
+        return joined.select(*out_cols)
+
     def upsert(self, updates: DataFrame, value_col_map: dict[str, str]) -> int:
         """MERGE semantics as an append of computed rows (§2.10 U1/U2).
 
@@ -199,58 +238,33 @@ class FeatureGroup:
         "merge" writes only the new version rows — no table rewrite. On
         Delta this maps 1:1 to MERGE WHEN (NOT) MATCHED.
         """
-        # one row per key is a hard precondition: two update rows for the
-        # same key would both fold against the SAME stored average (the
-        # chain needs sequential application — that's the streaming
-        # pipeline's per-key fold, not this batch merge)
-        dup = (
-            updates.groupBy(self.key_col)
-            .count()
-            .where(F.col("count") > 1)
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "upsert requires one row per key; pre-fold multi-event "
-                "batches (see streaming.InferencePipeline._fold_batch)"
-            )
-        current = self.online_view()
-        upd = updates.alias("u")
-        cur = current.alias("c")
-        joined = upd.join(cur, on=self.key_col, how="left")
-
-        out_cols = [
-            F.col(f"u.{self.key_col}").alias(self.key_col),
-            F.col(f"u.{self.event_time_col}").alias(self.event_time_col),
-        ]
-        handled = {self.key_col, self.event_time_col}
+        # every clause reads the same under both arms: an unmatched key's
+        # t.* columns are NULL, which turns each into its insert form
+        clauses = {self.event_time_col: F.col(f"s.{self.event_time_col}")}
         for obs_col, prefix in value_col_map.items():
-            latest_c, avg_c = f"latest_{prefix}", f"avg_{prefix}"
-            out_cols.append(F.col(f"u.{obs_col}").alias(latest_c))
-            out_cols.append(
-                F.when(
-                    F.col(f"c.{avg_c}").isNull(), F.col(f"u.{obs_col}")
-                )
-                .otherwise((F.col(f"c.{avg_c}") + F.col(f"u.{obs_col}")) / 2.0)
-                .alias(avg_c)
+            new, old_avg = F.col(f"s.{obs_col}"), F.col(f"t.avg_{prefix}")
+            clauses[f"latest_{prefix}"] = new
+            clauses[f"avg_{prefix}"] = F.when(old_avg.isNull(), new).otherwise(
+                (old_avg + new) / 2.0
             )
-            handled |= {latest_c, avg_c}
         # passthrough feature columns not maintained by the update rule:
         # take the update's value when the caller supplied the column,
         # else carry the stored value through unchanged
         for c in self.feature_cols:
-            if c not in handled:
-                if c in updates.columns:
-                    out_cols.append(
-                        F.coalesce(F.col(f"u.{c}"), F.col(f"c.{c}")).alias(c)
-                    )
-                else:
-                    out_cols.append(F.col(f"c.{c}").alias(c))
-
-        new_rows = joined.select(*out_cols).select(*self.schema.fieldNames())
-        return self.ingest(new_rows)
-
+            if c not in clauses:
+                stored = F.col(f"t.{c}")
+                clauses[c] = (
+                    F.coalesce(F.col(f"s.{c}"), stored) if c in updates.columns else stored
+                )
+        return self.ingest(
+            self._merged_rows(
+                updates,
+                clauses,
+                clauses,
+                "upsert requires one row per key; pre-fold multi-event "
+                "batches (see streaming.InferencePipeline._fold_batch)",
+            )
+        )
     def merge(
         self,
         source: DataFrame,
@@ -280,38 +294,10 @@ class FeatureGroup:
 
         Returns the committed version, or None if nothing changed.
         """
-        dup = (
-            source.groupBy(self.key_col).count().where(F.col("count") > 1).limit(1).count()
+        new_rows = self._merged_rows(
+            source, when_matched, when_not_matched,
+            "merge requires one source row per key",
         )
-        if dup:
-            raise ValueError("merge requires one source row per key")
-        t = self.online_view().alias("t")
-        s = source.alias("s")
-        joined = s.join(t, on=self.key_col, how="left")
-        matched = F.col(f"t.{self.event_time_col}").isNotNull()
-        if when_matched is None:
-            joined = joined.where(~matched)
-        if when_not_matched is None:
-            joined = joined.where(matched)
-
-        out_cols = []
-        for f in self.schema.fields:
-            c = f.name
-            if c == self.key_col:
-                out_cols.append(F.col(f"s.{self.key_col}").alias(c))
-                continue
-            m_expr = (when_matched or {}).get(c)
-            if m_expr is None:
-                m_expr = F.col(f"t.{c}")
-            i_expr = (when_not_matched or {}).get(c)
-            if i_expr is None:
-                i_expr = (
-                    F.col(f"s.{c}")
-                    if c in source.columns
-                    else F.lit(None).cast(f.dataType)
-                )
-            out_cols.append(F.when(matched, m_expr).otherwise(i_expr).alias(c))
-        new_rows = joined.select(*out_cols)
         if new_rows.limit(1).count() == 0:
             return None
         return self.ingest(new_rows)

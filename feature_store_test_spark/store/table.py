@@ -46,20 +46,28 @@ this class                  Delta Lake (Iceberg)
 ``vacuum()``                ``VACUUM t`` (``expire_snapshots``)
 ``merge`` (feature_group)   ``DeltaTable.merge().whenMatched...`` (``MERGE
                             INTO``)
-``ConcurrentCommitError``   ``ConcurrentModificationException`` — same
-                            optimistic first-writer-wins protocol
+``ConcurrentCommitError``   ``ConcurrentModificationException`` — raised
+                            when another writer took the version first
 ==========================  ===================================================
 
-The exclusive-create commit publish below IS Delta's protocol (versioned
-JSON actions published atomically over parquet data files), so behavior
-under concurrent writers, time travel, and CDF matches by construction,
-not just by API shape. ``tests/test_store.py`` pins those semantics, so
-an adapter passes the same suite.
+The exclusive-create commit publish below follows Delta's log layout
+(versioned JSON actions published atomically over parquet data files), so
+time travel and CDF match Delta, and so do concurrent BLIND appends: a
+loser re-publishes its files under the next version. Read-modify-write
+commits do NOT match Delta yet. ``FeatureGroup.upsert``/``merge`` and
+``InferencePipeline.process_batch`` read the online view at version V and
+publish rows computed from it; a commit another writer made after V goes
+unnoticed, and its update to the same key is silently lost. Delta's
+optimistic concurrency check (record the read version, check the commits
+published since for overlapping keys) is ROADMAP direction 3.
+``tests/test_store.py`` pins the semantics above, so an adapter passes
+the same suite.
 """
 
 from __future__ import annotations
 
 import datetime as _dt
+import functools
 import json
 import os
 import tempfile
@@ -77,12 +85,15 @@ _DATA_DIR = "data"
 class ConcurrentCommitError(RuntimeError):
     """Another writer published this version first.
 
-    Optimistic concurrency, first-writer-wins: commit files are created
+    First-writer-wins on the commit FILE: commit files are created
     EXCLUSIVELY (os.link raises EEXIST where os.rename would silently
-    replace the winner's commit — the lost-update failure mode of naive
-    rename-based logs). Appends are commutative, so ``append`` retries
-    under the next version automatically; ``compact`` aborts because its
-    snapshot is stale — re-run it against the new latest version.
+    replace the winner's commit). Blind appends commute, so ``append``
+    retries under the next version automatically; snapshot rewrites
+    (``compact``/``delete``/``restore``) abort because their snapshot is
+    stale — re-run against the new latest version. This is not a conflict
+    check on data: a read-modify-write (``upsert``/``merge``) that lost
+    nothing at the file level can still overwrite a newer commit's update
+    to the same key (see the module docstring).
     """
 
 # types whose per-file min/max are meaningful and JSON-serializable —
@@ -148,7 +159,7 @@ class VersionedParquetTable:
         if missing:
             raise ValueError(f"partition columns not in schema: {sorted(missing)}")
 
-    # -- log helpers --------------------------------------------------------
+    # -- commit log ---------------------------------------------------------
     @property
     def _log_path(self) -> str:
         return os.path.join(self.path, _LOG_DIR)
@@ -169,9 +180,87 @@ class VersionedParquetTable:
         vs = self.versions()
         return vs[-1] if vs else None
 
-    def _load_commit(self, version: int) -> dict:
-        with open(self._commit_file(version)) as f:
-            return json.load(f)
+    def _read_log(self, since: int = 0, until: int | None = None) -> list[dict]:
+        """The parsed commits with ``since < version <= until``, in version
+        order — the only reader of commit files."""
+        out = []
+        for v in self.versions():
+            if v > since and (until is None or v <= until):
+                with open(self._commit_file(v)) as f:
+                    out.append(json.load(f))
+        return out
+
+    def commits(self) -> list[dict]:
+        """Raw commit-log entries (the machine-readable log; ``history()``
+        is the DESCRIBE HISTORY DataFrame view of the same)."""
+        return self._read_log()
+
+    def _stage(self, commit: dict) -> str:
+        """Write ``commit`` to a temp file in the log dir; returns its path."""
+        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
+        with os.fdopen(fd, "w") as f:
+            json.dump(commit, f)
+        return tmp
+
+    def _publish_new_commit(self, tmp: str, version: int) -> None:
+        """Exclusively publish a NEW commit file. ``os.link`` is atomic on
+        POSIX and raises if the target exists — unlike ``os.rename``,
+        which would silently overwrite a concurrent winner's commit."""
+        target = self._commit_file(version)
+        try:
+            os.link(tmp, target)
+        except FileExistsError:
+            os.unlink(tmp)
+            raise ConcurrentCommitError(
+                f"version {version} of {self.path} was committed by another writer"
+            ) from None
+        os.unlink(tmp)
+
+    def _rewrite_commit(self, c: dict) -> None:
+        """Atomically replace a commit file (tempfile + rename)."""
+        os.rename(self._stage(c), self._commit_file(c["version"]))
+
+    def _commit(self, df: DataFrame, version: int, **fields) -> int:
+        """Write ``df`` to a fresh data dir, then publish it as ``version``;
+        returns the published version.
+
+        Files land first and one exclusive link publishes the commit, so a
+        reader enumerating the log sees the whole commit or none of it. An
+        append (no ``type`` field) is blind: on a lost publish race the
+        SAME files are re-committed under the next free version (bounded
+        retries). A compact commit is pinned to its ``base_version``, so a
+        lost race means its snapshot is stale and it aborts.
+        """
+        is_append = "type" not in fields
+        os.makedirs(self._log_path, exist_ok=True)
+        data_dir = os.path.join(
+            self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
+        )
+        writer = df.write.mode("errorifexists")
+        if self.partition_cols:
+            writer = writer.partitionBy(*self.partition_cols)
+        writer.parquet(data_dir)
+        body = {
+            "data_dir": data_dir,
+            "schema": df.schema.jsonValue(),
+            "partition_cols": self.partition_cols,
+            "files": self._collect_file_stats(
+                data_dir, self.schema if is_append else self._versioned_schema
+            ),
+            **fields,
+        }
+        for _ in range(16):
+            tmp = self._stage({"version": version, "ts_unix": time.time(), **body})
+            try:
+                self._publish_new_commit(tmp, version)
+                return version
+            except ConcurrentCommitError:
+                if not is_append:
+                    raise
+            version = (self.latest_version() or 0) + 1
+        raise ConcurrentCommitError(
+            f"append to {self.path} lost 16 publish races in a row"
+        )
 
     # -- file statistics -----------------------------------------------------
     def _collect_file_stats(self, data_dir: str, schema: T.StructType) -> list[dict]:
@@ -224,8 +313,7 @@ class VersionedParquetTable:
         latest = probe.latest_version()
         if latest is None:
             raise ValueError(f"no commits at {path}")
-        with open(probe._commit_file(latest)) as f:
-            commit = json.load(f)
+        (commit,) = probe._read_log(since=latest - 1)
         schema = T.StructType.fromJson(commit["schema"])
         fields = [f for f in schema.fields if f.name != "_commit_version"]
         return cls(
@@ -251,12 +339,17 @@ class VersionedParquetTable:
         if new:
             self.schema = T.StructType([*self.schema.fields, *new])
 
+    @property
+    def _versioned_schema(self) -> T.StructType:
+        """The table's columns plus ``_commit_version`` — the schema of
+        every read, and of compacted files, which materialize it."""
+        return T.StructType(
+            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
+        )
+
     # -- write --------------------------------------------------------------
     def append(self, df: DataFrame, merge_schema: bool = False) -> int:
         """Append a new immutable version; returns the committed version id.
-
-        Files first, then an atomic rename of the commit JSON — a reader
-        enumerating the log sees either the whole commit or none of it.
 
         ``merge_schema=True`` (Delta's mergeSchema): new columns in ``df``
         widen the table schema; columns the table has but ``df`` lacks are
@@ -277,37 +370,7 @@ class VersionedParquetTable:
                 f"schema mismatch: expected {self.schema.fieldNames()}, "
                 f"got {df.schema.fieldNames()}"
             )
-        os.makedirs(self._log_path, exist_ok=True)
-        version = (self.latest_version() or 0) + 1
-        data_dir = os.path.join(self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}")
-        writer = df.write.mode("errorifexists")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(data_dir)
-
-        files = self._collect_file_stats(data_dir, self.schema)
-        # appends are commutative: on a publish race, re-commit the SAME
-        # data files under the next free version (bounded retries)
-        for _ in range(16):
-            commit = {
-                "version": version,
-                "data_dir": data_dir,
-                "ts_unix": time.time(),
-                "schema": df.schema.jsonValue(),
-                "partition_cols": self.partition_cols,
-                "files": files,
-            }
-            fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-            with os.fdopen(fd, "w") as f:
-                json.dump(commit, f)
-            try:
-                self._publish_new_commit(tmp, version)
-                return version
-            except ConcurrentCommitError:
-                version = (self.latest_version() or 0) + 1
-        raise ConcurrentCommitError(
-            f"append to {self.path} lost {16} publish races in a row"
-        )
+        return self._commit(df, (self.latest_version() or 0) + 1)
 
     # -- maintenance --------------------------------------------------------
     def compact(
@@ -351,13 +414,13 @@ class VersionedParquetTable:
         base = self.latest_version()
         if base is None:
             raise ValueError("nothing to compact: table has no commits")
+        missing = set(cluster_by or zorder_by or []) - set(self.schema.fieldNames())
+        if missing:
+            raise ValueError(f"cluster columns not in schema: {sorted(missing)}")
         snapshot = self.read()  # includes _commit_version
         if zorder_by:
             from feature_store_test_spark.operators.zorder import zorder_key
 
-            missing = set(zorder_by) - set(self.schema.fieldNames())
-            if missing:
-                raise ValueError(f"cluster columns not in schema: {sorted(missing)}")
             z = zorder_key(snapshot, list(zorder_by))
             range_args = ([n_files] if n_files else []) + ["__z"]
             snapshot = (
@@ -367,9 +430,6 @@ class VersionedParquetTable:
                 .drop("__z")
             )
         elif cluster_by:
-            missing = set(cluster_by) - set(self.schema.fieldNames())
-            if missing:
-                raise ValueError(f"cluster columns not in schema: {sorted(missing)}")
             range_args = ([n_files] if n_files else []) + list(cluster_by)
             snapshot = snapshot.repartitionByRange(*range_args).sortWithinPartitions(
                 *cluster_by
@@ -377,43 +437,16 @@ class VersionedParquetTable:
         elif n_files:
             snapshot = snapshot.repartition(n_files)
         return self._rewrite_snapshot(
-            snapshot, base, {"cluster_by": cluster_by or [], "zorder_by": zorder_by or []}
+            snapshot, base, cluster_by=cluster_by or [], zorder_by=zorder_by or []
         )
 
-    def _rewrite_snapshot(self, snapshot: DataFrame, base: int, extra: dict) -> int:
+    def _rewrite_snapshot(self, snapshot: DataFrame, base: int, **extra) -> int:
         """Publish ``snapshot`` (with its ``_commit_version`` column) as a
         compact-type commit replacing everything up to ``base``. Shared by
         compact / delete / restore — every full-snapshot rewrite op."""
-        os.makedirs(self._log_path, exist_ok=True)
-        version = base + 1
-        data_dir = os.path.join(
-            self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
+        return self._commit(
+            snapshot, base + 1, type="compact", base_version=base, **extra
         )
-        writer = snapshot.write.mode("errorifexists")
-        if self.partition_cols:
-            writer = writer.partitionBy(*self.partition_cols)
-        writer.parquet(data_dir)
-        compact_schema = T.StructType(
-            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
-        )
-        commit = {
-            "version": version,
-            "type": "compact",
-            "base_version": base,
-            "data_dir": data_dir,
-            "ts_unix": time.time(),
-            "schema": snapshot.schema.jsonValue(),
-            "partition_cols": self.partition_cols,
-            "files": self._collect_file_stats(data_dir, compact_schema),
-            **extra,
-        }
-        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(commit, f)
-        # a snapshot rewrite is pinned to base_version — losing the
-        # publish race means the snapshot is stale, so abort (no retry)
-        self._publish_new_commit(tmp, version)
-        return version
 
     def delete(self, condition) -> tuple[int, int]:
         """DELETE FROM analog: rewrite the snapshot without matching rows.
@@ -433,7 +466,7 @@ class VersionedParquetTable:
             n_deleted = snapshot.where(cond).count()
             kept = snapshot.where(~cond | cond.isNull())
             version = self._rewrite_snapshot(
-                kept, base, {"op": "delete", "predicate": str(condition)}
+                kept, base, op="delete", predicate=str(condition)
             )
         finally:
             snapshot.unpersist()
@@ -448,15 +481,14 @@ class VersionedParquetTable:
         base = self.latest_version()
         snapshot = self.read(as_of_version=to_version)
         return self._rewrite_snapshot(
-            snapshot, base, {"op": "restore", "restored_from": to_version}
+            snapshot, base, op="restore", restored_from=to_version
         )
 
     def history(self) -> DataFrame:
         """DESCRIBE HISTORY analog: one row per commit — version, type,
         operation, timestamp, file/row counts — straight from the log."""
         rows = []
-        for v in self.versions():
-            c = self._load_commit(v)
+        for c in self._read_log():
             files = c.get("files") or []
             rows.append(
                 (
@@ -476,20 +508,6 @@ class VersionedParquetTable:
             "n_files int, n_rows long, base_version int, restored_from int",
         )
 
-    def _publish_new_commit(self, tmp: str, version: int) -> None:
-        """Exclusively publish a NEW commit file. ``os.link`` is atomic on
-        POSIX and raises if the target exists — unlike ``os.rename``,
-        which would silently overwrite a concurrent winner's commit."""
-        target = self._commit_file(version)
-        try:
-            os.link(tmp, target)
-        except FileExistsError:
-            os.unlink(tmp)
-            raise ConcurrentCommitError(
-                f"version {version} of {self.path} was committed by another writer"
-            ) from None
-        os.unlink(tmp)
-
     def vacuum(self) -> list[int]:
         """Garbage-collect data made unreachable by the LATEST compaction:
         commits at or below its base_version. Their commit files are kept
@@ -503,93 +521,60 @@ class VersionedParquetTable:
         """
         import shutil
 
-        commits = []
-        for v in self.versions():
-            with open(self._commit_file(v)) as f:
-                commits.append(json.load(f))
+        commits = self._read_log()
         compacts = [c for c in commits if c.get("type") == "compact"]
         if not compacts:
             return []
         base = max(compacts, key=lambda c: c["version"])["base_version"]
         removed = []
         for c in commits:
-            # retry leg: a prior vacuum that crashed after tombstoning but
-            # before (or during) the rmtree left vacuum_dir behind —
-            # finish the deletion idempotently
-            if c.get("vacuumed") and c.get("vacuum_dir"):
-                shutil.rmtree(c["vacuum_dir"], ignore_errors=True)
-                if not os.path.exists(c["vacuum_dir"]):
-                    c.pop("vacuum_dir")
-                    self._rewrite_commit(c)
-                    # a retried COMPLETION is a vacuum of this version
-                    # (r7 ADVICE: a mid-rmtree-crashed version was
-                    # otherwise reported by neither the crashed call nor
-                    # the retry). Reporting is completion-based on both
-                    # legs — see the normal leg below — so a version is
-                    # reported by exactly ONE call, the one whose rmtree
-                    # actually finished.
-                    removed.append(c["version"])
-                continue
-            if c["version"] <= base and c.get("data_dir"):
-                # TOMBSTONE FIRST, then delete (round 7): the old
-                # delete-then-tombstone order had a crash window where the
-                # data was gone but the commit still pointed at it, so
-                # readers hit a raw parquet path-not-found instead of the
-                # clean "versions were vacuumed" error. Tombstone-first
-                # inverts the failure: a crash leaks the directory, and
-                # the retained vacuum_dir lets the next vacuum() finish
-                # the job (retry leg above).
+            if not c.get("vacuumed"):
+                if c["version"] > base or not c.get("data_dir"):
+                    continue
+                # tombstone BEFORE deleting: a crash then leaks the
+                # directory (the retained vacuum_dir lets the next call
+                # finish it) instead of leaving a commit that points at
+                # deleted data
                 c["vacuum_dir"] = c["data_dir"]
                 c["data_dir"] = None
                 c["vacuumed"] = True
                 self._rewrite_commit(c)
-                shutil.rmtree(c["vacuum_dir"], ignore_errors=True)
-                if not os.path.exists(c["vacuum_dir"]):
-                    c.pop("vacuum_dir")
-                    self._rewrite_commit(c)
-                    # completion-based reporting (code-review r8): if the
-                    # rmtree failed non-fatally (ignore_errors swallows
-                    # e.g. EACCES) the retained vacuum_dir routes this
-                    # version to the retry leg of a LATER call, which
-                    # reports it then — appending here too would report
-                    # the same version twice across calls.
-                    removed.append(c["version"])
+            elif not c.get("vacuum_dir"):
+                continue
+            shutil.rmtree(c["vacuum_dir"], ignore_errors=True)
+            # reported by the one call whose rmtree finished: a failure
+            # swallowed by ignore_errors keeps vacuum_dir for a later retry
+            if not os.path.exists(c["vacuum_dir"]):
+                c.pop("vacuum_dir")
+                self._rewrite_commit(c)
+                removed.append(c["version"])
         return removed
 
-    def _rewrite_commit(self, c: dict) -> None:
-        """Atomically replace a commit file (tempfile + rename)."""
-        fd, tmp = tempfile.mkstemp(dir=self._log_path, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(c, f)
-        os.rename(tmp, self._commit_file(c["version"]))
-
     # -- read ---------------------------------------------------------------
-    def _visible_commits(self, as_of_version: int | None) -> tuple[dict | None, list[dict]]:
-        """(latest visible compaction, visible append commits) for a
-        snapshot — a compaction replaces every commit at or below its
-        base_version (older dirs remain only for deeper time travel)."""
-        versions = self.versions()
-        if as_of_version is not None:
-            versions = [v for v in versions if v <= as_of_version]
-        commits = []
-        for v in versions:
-            with open(self._commit_file(v)) as f:
-                commits.append(json.load(f))
-        compacts = [c for c in commits if c.get("type") == "compact"]
-        compact = max(compacts, key=lambda c: c["version"]) if compacts else None
-        visible_appends = [
+    def _visible_commits(self, as_of_version: int | None) -> list[dict]:
+        """The commits a snapshot reads: the latest visible compaction (if
+        any) first, then the append commits above its base_version — a
+        compaction replaces every commit at or below its base (older dirs
+        remain only for deeper time travel)."""
+        commits = self._read_log(until=as_of_version)
+        compact = max(
+            (c for c in commits if c.get("type") == "compact"),
+            key=lambda c: c["version"],
+            default=None,
+        )
+        snapshot = ([compact] if compact else []) + [
             c
             for c in commits
             if c.get("type", "append") == "append"
             and (compact is None or c["version"] > compact["base_version"])
         ]
-        gone = [c["version"] for c in visible_appends if not c.get("data_dir")]
+        gone = [c["version"] for c in snapshot if not c.get("data_dir")]
         if gone:
             raise ValueError(
                 f"versions {gone} were vacuumed; time travel below the "
                 "compaction base is no longer available"
             )
-        return compact, visible_appends
+        return snapshot
 
     @staticmethod
     def _candidate_files(commit: dict, where: list[tuple]) -> list[str] | None:
@@ -603,6 +588,56 @@ class VersionedParquetTable:
             for f in files
             if all(_may_match(f["stats"], c, op, v) for (c, op, v) in where)
         ]
+
+    def _scan(self, commits: list[dict], where: list[tuple] | None = None) -> DataFrame:
+        """Rows of ``commits`` with ``_commit_version``; the empty frame
+        when there are none.
+
+        Append commits are read in ONE multi-path scan (a union per commit
+        grows the plan with history and chokes the optimizer); each row's
+        version is recovered from its data-dir name via
+        ``_metadata.file_path`` (input_file_name() is non-deterministic
+        and would block pushdown). Three cases read per commit, with the
+        data dir as basePath, and union: compacted files, which carry
+        ``_commit_version`` as a column; hive-partitioned dirs, which
+        Spark's partition discovery refuses to mix in one scan
+        (CONFLICTING_DIRECTORY_STRUCTURES); and a stats-pruned ``where``
+        read, which lists each commit's candidate files and skips commits
+        with none.
+        """
+        scans = []  # (paths, basePath, compacted)
+        shared = []
+        for c in commits:
+            compacted = c.get("type") == "compact"
+            paths = self._candidate_files(c, where) if where else None
+            if paths == []:
+                continue
+            if compacted or where or self.partition_cols:
+                scans.append((paths or [c["data_dir"]], c["data_dir"], compacted))
+            else:
+                shared.append(c["data_dir"])
+        if shared:
+            scans.append((shared, None, False))
+        cols = [*self.schema.fieldNames(), "_commit_version"]
+        parts = []
+        for paths, base, compacted in scans:
+            reader = self.spark.read.schema(
+                self._versioned_schema if compacted else self.schema
+            )
+            if base is not None:
+                reader = reader.option("basePath", base)
+            df = reader.parquet(*paths)
+            if not compacted:
+                df = df.withColumn(
+                    "_commit_version",
+                    F.regexp_extract(
+                        F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
+                    ).cast("int"),
+                )
+            parts.append(df.select(*cols))
+        if not parts:
+            return self.spark.createDataFrame([], self._versioned_schema)
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def read(
         self,
@@ -622,95 +657,14 @@ class VersionedParquetTable:
         predicate is applied to the surviving rows — so the result equals
         ``read().where(...)`` while a clustered point read touches ~1 file.
         """
-        compact, visible_appends = self._visible_commits(as_of_version)
-        if compact is None and not visible_appends:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
-
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        compact_schema = T.StructType(
-            [*self.schema.fields, T.StructField("_commit_version", T.IntegerType())]
-        )
-        version_from_path = F.regexp_extract(
-            F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
-        ).cast("int")
-
-        parts = []
-        if where:
-            # stats-pruned read: per-commit candidate file lists; basePath
-            # keeps hive-partition columns resolvable from leaf paths. The
-            # per-commit scan granularity is fine HERE because pruning is
-            # for point/range reads that touch few commits and files —
-            # full scans take the else-branch's single multi-dir read.
-            for c in ([compact] if compact else []) + visible_appends:
-                cand = self._candidate_files(c, where)
-                if cand is not None and not cand:
-                    continue
-                is_compact = c.get("type") == "compact"
-                reader = (
-                    self.spark.read.schema(compact_schema if is_compact else self.schema)
-                    .option("basePath", c["data_dir"])
-                )
-                df = reader.parquet(*(cand if cand is not None else [c["data_dir"]]))
-                if not is_compact:
-                    df = df.withColumn("_commit_version", version_from_path)
-                parts.append(df.select(*cols))
-        else:
-            if compact is not None:
-                # compacted files carry _commit_version as a real column
-                parts.append(
-                    self.spark.read.schema(compact_schema)
-                    .parquet(compact["data_dir"])
-                    .select(*cols)
-                )
-            if visible_appends:
-                # ONE multi-path scan for all append commits (a union-per-
-                # commit plan grows linearly with history and chokes the
-                # optimizer); the commit version is recovered from the
-                # data-dir name via _metadata.file_path (input_file_name()
-                # is non-deterministic and would block pushdown).
-                # Hive-partitioned commits are the exception: Spark's
-                # partition discovery rejects multiple partitioned roots in
-                # one scan (CONFLICTING_DIRECTORY_STRUCTURES), so those
-                # read per-dir and union — compaction keeps that union
-                # short-lived.
-                if self.partition_cols:
-                    for c in visible_appends:
-                        out = (
-                            self.spark.read.schema(self.schema)
-                            .option("basePath", c["data_dir"])
-                            .parquet(c["data_dir"])
-                        )
-                        parts.append(
-                            out.withColumn(
-                                "_commit_version", F.lit(c["version"]).cast("int")
-                            ).select(*cols)
-                        )
-                else:
-                    out = self.spark.read.schema(self.schema).parquet(
-                        *[c["data_dir"] for c in visible_appends]
-                    )
-                    parts.append(
-                        out.withColumn("_commit_version", version_from_path).select(
-                            *cols
-                        )
-                    )
-
-        if not parts:
-            empty = self.spark.createDataFrame([], self.schema)
-            result = empty.withColumn("_commit_version", F.lit(None).cast("int"))
-        else:
-            result = parts[0]
-            for p in parts[1:]:
-                result = result.unionByName(p)
-        if where:
-            for c, op, v in where:
-                col = F.col(c)
-                cond = {
-                    "=": col == v, "<": col < v, "<=": col <= v,
-                    ">": col > v, ">=": col >= v,
-                }[op]
-                result = result.where(cond)
+        result = self._scan(self._visible_commits(as_of_version), where)
+        for c, op, v in where or []:
+            col = F.col(c)
+            cond = {
+                "=": col == v, "<": col < v, "<=": col <= v,
+                ">": col > v, ">=": col >= v,
+            }[op]
+            result = result.where(cond)
         return result
 
     def changes(
@@ -730,54 +684,16 @@ class VersionedParquetTable:
         before any file IO.
         """
         until = until_version if until_version is not None else self.latest_version()
-        if until is None or until <= since_version:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
-        window = [
-            c
-            for c in (self._load_commit(v) for v in self.versions())
-            if since_version < c["version"] <= until
-        ]
+        window = self._read_log(since_version, until)
         if any(c.get("type") == "compact" for c in window):
             # a compaction in range rewrote history; its dir mixes old and
             # new rows, so fall back to snapshot + _commit_version filter
             # (still correct — the version column is materialized)
             out = self.read(as_of_version=until)
             return out.where(F.col("_commit_version") > since_version)
-        dirs = [c["data_dir"] for c in window if c.get("data_dir")]
-        if len(dirs) < len(window):
+        if not all(c.get("data_dir") for c in window):
             raise ValueError("requested change range includes vacuumed commits")
-        if not dirs:
-            empty = self.spark.createDataFrame([], self.schema)
-            return empty.withColumn("_commit_version", F.lit(None).cast("int"))
-        cols = [*self.schema.fieldNames(), "_commit_version"]
-        if self.partition_cols:
-            # partitioned roots can't share one scan (see read()); union
-            parts = []
-            for c in window:
-                out = (
-                    self.spark.read.schema(self.schema)
-                    .option("basePath", c["data_dir"])
-                    .parquet(c["data_dir"])
-                )
-                parts.append(
-                    out.withColumn(
-                        "_commit_version", F.lit(c["version"]).cast("int")
-                    ).select(*cols)
-                )
-            result = parts[0]
-            for p in parts[1:]:
-                result = result.unionByName(p)
-            return result
-        version_from_path = F.regexp_extract(
-            F.col("_metadata.file_path"), r"/v(\d{10})-[0-9a-f]{8}/", 1
-        ).cast("int")
-        return (
-            self.spark.read.schema(self.schema)
-            .parquet(*dirs)
-            .withColumn("_commit_version", version_from_path)
-            .select(*cols)
-        )
+        return self._scan(window)
 
     def diff(
         self,
@@ -801,11 +717,7 @@ class VersionedParquetTable:
         """
         until = until_version if until_version is not None else self.latest_version()
         cols = self.schema.fieldNames()
-        before = (
-            self.read(as_of_version=since_version).select(*cols)
-            if since_version and since_version > 0
-            else self.spark.createDataFrame([], self.schema)
-        )
+        before = self.read(as_of_version=since_version or 0).select(*cols)
         after = self.read(as_of_version=until).select(*cols)
         tag = lambda df, t: df.withColumn("_change_type", F.lit(t))  # noqa: E731
         if not key_cols:
@@ -843,10 +755,9 @@ class VersionedParquetTable:
         snapshot holds vs how many survive stats pruning for ``where``.
         The observability hook tests and capacity planning use to check a
         clustering layout actually earns its rewrite."""
-        compact, visible_appends = self._visible_commits(as_of_version)
         total_f = cand_f = total_r = cand_r = 0
         no_stats = 0
-        for c in ([compact] if compact else []) + visible_appends:
+        for c in self._visible_commits(as_of_version):
             files = c.get("files")
             if files is None:
                 no_stats += 1
@@ -865,12 +776,3 @@ class VersionedParquetTable:
             "candidate_rows": cand_r,
             "commits_without_stats": no_stats,
         }
-
-    def commits(self) -> list[dict]:
-        """Raw commit-log entries (the machine-readable log; ``history()``
-        is the DESCRIBE HISTORY DataFrame view of the same)."""
-        out = []
-        for v in self.versions():
-            with open(self._commit_file(v)) as f:
-                out.append(json.load(f))
-        return out

@@ -17,6 +17,13 @@ def test_lsh_bucket_deterministic(spark, sf_dir):
     b1 = emb.select("vec_id", lsh_bucket("embedding", 4, 64).alias("b"))
     b2 = emb.select("vec_id", lsh_bucket("embedding", 4, 64).alias("b"))
     assert sorted(map(tuple, b1.collect())) == sorted(map(tuple, b2.collect()))
+    # names the SQL fast path must not splice: qualified, and backticked
+    qualified = emb.alias("d").select("vec_id", lsh_bucket("d.embedding", 4, 64).alias("b"))
+    ticked = emb.withColumnRenamed("embedding", "emb`x").select(
+        "vec_id", lsh_bucket("`emb``x`", 4, 64).alias("b")
+    )
+    for other in (qualified, ticked):
+        assert sorted(map(tuple, other.collect())) == sorted(map(tuple, b1.collect()))
     n_buckets = b1.select("b").distinct().count()
     assert 2 <= n_buckets <= 16  # 4 planes → at most 16 buckets, spread out
 
