@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from feature_store_test_spark.functions import dec_ticks_sql, tick_sums_sql, tick_total_sql
 
 
 def engineer_features(
@@ -30,35 +31,24 @@ def engineer_features(
     event_time: str,
     value_cols: list[str],
     tiebreak: str,
-    avg_round_dp: int | None = 6,
 ) -> DataFrame:
     """Per-key snapshot features: latest value + running mean per value column.
 
     ``tiebreak`` is a unique column ordering rows within equal timestamps,
     making "latest" deterministic under any shuffle (SURVEY §2.13 Q1).
-    Averages are computed from exact decimal(18,2) sums (driver fixtures are
-    2-dp money values) then rounded — engine-stable and oracle-stable.
+    Each value column is summed exactly as decimal(18,2) (the fixtures'
+    values are 2-dp money), so the sum is the same in any partition order.
+    The average is then that sum as a double divided by the row count,
+    rounded with ``round(double, 6)``. That rounding is not exact-decimal:
+    at an exact 6-dp tie of the true mean (counts like 32 or 80) Spark
+    rounds the double's decimal rendering half-up, and q16's DuckDB oracle
+    can round about one key per 500k rows the other way.
     """
     # ONE struct-max carries the timestamp and every latest_<v> at once:
     # max(struct(ts, tiebreak, v1, v2, ...)) is lexicographic on the
     # (unique) (ts, tiebreak) prefix, so its trailing fields are exactly
     # max_by(v, (ts, tiebreak)) for each v, and its leading field is
-    # max(ts). One binary comparison per row replaces 1 + len(value_cols)
-    # separate ordered aggregates. The exact money ticks are pre-projected
-    # ONCE per value column — inline dec_sum evaluates its tick tree in
-    # both the hi- and lo-sum update paths (hash-agg codegen shares no
-    # subexpressions across aggregate functions; same finding as q01) —
-    # and recombined with dec_sum's own formula, so results stay
-    # bit-identical. Both changes together: 0.48s -> 0.30s at sf0.1.
-    from feature_store_test_spark.functions import dec_ticks_sql
-
-    # single-parse selectExpr/expr strings throughout (round 6, the q01
-    # precedent): the Column-API form of these projections cost ~0.1s of
-    # eager per-call JVM analysis; the SQL strings build the IDENTICAL
-    # Catalyst trees (dec_ticks_sql is dec_ticks; the hi/lo split and the
-    # recombination formula are textually the same expressions), so
-    # results stay bit-identical — pinned by the q16 oracle and the
-    # streaming bit-equality tests.
+    # max(ts). The money ticks are pre-projected once (see tick_sums_sql).
     pre = df.selectExpr(
         f"`{key}`",
         f"`{event_time}`",
@@ -73,20 +63,11 @@ def engineer_features(
         F.expr(f"max(struct({struct_cols}))").alias("__latest"),
         F.expr("count(1)").alias("__n"),
     ]
-    for v in value_cols:
-        aggs.append(F.expr(f"SUM(shiftright(`__t_{v}`, 22))").alias(f"__t_{v}_hi"))
-        aggs.append(
-            F.expr(f"SUM(`__t_{v}` & CAST(4194303 AS BIGINT))").alias(f"__t_{v}_lo")
-        )
     out = [f"`{key}`", f"__latest.`{event_time}` AS `{event_time}`"]
     for v in value_cols:
-        avg = (
-            f"(CAST(((CAST(`__t_{v}_hi` AS DECIMAL(38,0)) * CAST(4194304 AS DECIMAL(8,0))"
-            f" + CAST(`__t_{v}_lo` AS DECIMAL(38,0)))"
-            f" / CAST(100 AS DECIMAL(7,0))) AS DOUBLE) / __n)"
-        )
-        if avg_round_dp is not None:
-            avg = f"round({avg}, {avg_round_dp})"
+        hi, lo = tick_sums_sql(f"`__t_{v}`")
+        aggs += [F.expr(hi).alias(f"__t_{v}_hi"), F.expr(lo).alias(f"__t_{v}_lo")]
+        total = tick_total_sql(f"`__t_{v}_hi`", f"`__t_{v}_lo`", 2)
         out.append(f"__latest.`{v}` AS `latest_{v}`")
-        out.append(f"{avg} AS `avg_{v}`")
+        out.append(f"round(({total} / __n), 6) AS `avg_{v}`")
     return pre.groupBy(key).agg(*aggs).selectExpr(*out)

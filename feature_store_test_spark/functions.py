@@ -1,12 +1,14 @@
 """Shared column-expression helpers (the engine's scalar-function layer).
 
-Everything here returns lazy ``Column`` expressions built from
-``pyspark.sql.functions`` — JVM-side, whole-stage-codegen'd, never Python
+Everything here builds lazy ``Column`` expressions (or the SQL strings
+they parse from) — JVM-side, whole-stage-codegen'd, never Python
 row-at-a-time. The helpers encode the cross-engine float discipline that
 makes every query hash-match its DuckDB oracle (see oracle.py):
 
 * money/quantity sums go through ``decimal(18,s)`` integer arithmetic —
-  bit-identical regardless of partial-aggregation order;
+  bit-identical regardless of partial-aggregation order. This module is
+  the only one that knows that format (``dec_ticks_sql``,
+  ``tick_sums_sql``, ``tick_total_sql`` and ``dec_sum`` built from them);
 * hash bucketing uses md5 hex prefixes compared lexicographically —
   identical in any engine, deterministic across re-runs;
 * no helper ever rounds a value that can terminate on a rounding boundary.
@@ -17,94 +19,21 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 
-def dec_sum(col: str | F.Column, scale: int = 2, out: str | None = None) -> F.Column:
-    """Exact money sum, value-identical to
-    ``CAST(SUM(CAST(x AS DECIMAL(18,scale))) AS DOUBLE)`` (what the DuckDB
-    oracles run) but ~2.5x faster on the Spark side.
-
-    Decimal integer arithmetic is summation-order-free, so partial
-    aggregates and DuckDB's sequential sum produce the same bits; a raw
-    double sum differs in low bits between engines (and between runs, once
-    partition order changes). The naive form pays a per-row BigDecimal
-    HALF_UP round in ``CAST(double AS DECIMAL)`` plus a non-compact
-    (>18-digit) decimal accumulator. Instead:
-
-    * per row: ``RINT(ROUND(x, s) * 10^s)`` — DuckDB's double→decimal
-      cast goes through the double's SHORTEST DECIMAL REPRESENTATION and
-      rounds half away from zero (measured on 1.0.0: double 2.675, whose
-      binary value is 2.67499999999999982, casts to 2.68 — only the
-      "2.675" repr explains that), which is exactly Java's
-      ``BigDecimal.valueOf(double).setScale(s, HALF_UP)``, i.e. Spark's
-      ``round(double, s)``. The outer RINT snaps the re-widened double
-      (k/10^s * 10^s ≈ k) back to the exact integer tick. Verified
-      bit-identical to the DuckDB cast over adversarial .xx5/.x05 ties of
-      both signs plus 200 random 4-dp values. Scaled-double forms
-      (``FLOOR(x*10^s + 0.5)``, ``RINT(x*10^s)``) agree on money-exact
-      inputs but diverge on any tie the shortest repr resolves
-      differently — robustness against a fixture generator emitting more
-      than s decimals. Costs one BigDecimal per row (measured ~2x a bare
-      floor on the expression stage alone, invisible at whole-query
-      level);
-    * accumulate: SUM over DECIMAL(20,0) ticks — overflow-free at any
-      scale (a 100 TB sum of 1e11-tick rows is ~1e21 « 1e30);
-    * final: one exact decimal division by 10^s, cast to double —
-      correctly rounded, bit-identical to the naive form's cast.
-    """
-    if scale > 6:
-        # the final exact division lands on decimal(38,6) after Spark's
-        # precision-loss adjustment; >6 fractional digits would be rounded
-        raise ValueError(f"dec_sum supports scale <= 6, got {scale}")
-    if isinstance(col, str):
-        # a plain column NAME routes through the single-RPC expr form —
-        # same parsed Catalyst tree, ~25x fewer py4j round-trips
-        return dec_sum_sql(f"`{col}`", scale, out)
-    c = col
-    w = c * F.lit(float(10**scale))
-    # The repr-based round (BigDecimal per row) can only disagree with the
-    # cheap scaled-double RINT when the scaled value sits within double
-    # noise of a .5 boundary (the repr and the double differ by well under
-    # 1e-6 ticks for any money-range value). Guarding the expensive branch
-    # keeps the hot path pure codegen — money-exact data never takes it —
-    # at full bit parity: boundary rows (.xx5-repr inputs) route through
-    # the exact semantics. Measured: bare ROUND form cost q01 +1.4s at the
-    # 10x bench point; guarded form is indistinguishable from the old
-    # FLOOR while passing the adversarial-tie parity test.
-    ticks = dec_ticks(c, scale)
-    # Accumulate as TWO long sums over a hi/lo bit-split of the ticks, not
-    # one decimal sum: sum over DECIMAL(20,0) exceeds Spark's 18-digit
-    # compact-long representation, so every row paid a heap BigDecimal in
-    # the aggregation hash map (measured 5x the whole-stage cost of a long
-    # sum — q01's five money sums were ~1.5s of pure accumulator overhead
-    # at sf0.1). The split keeps 76-bit exactness on 64-bit codegen sums:
-    #   hi = ticks >> 22 (arithmetic shift = floor division, negatives ok)
-    #   lo = ticks - hi*2^22            in [0, 2^22)
-    #   total = sum(hi)*2^22 + sum(lo)  recombined in DECIMAL(38,0)
-    # Overflow bound: |sum(hi)| <= N * |ticks|/2^22 and sum(lo) < N * 2^22,
-    # so both partial sums fit a long for N*|ticks| < 2^85 — e.g. 2e12 rows
-    # of scale-6 ticks on 1e7-unit money (2^44/row) with 2^41 headroom; the
-    # old decimal accumulator's bound was 1e20 ticks, i.e. this loses no
-    # realistic range. Final recombine + division happen once per group in
-    # exact decimal, so the double result is bit-identical to
-    # CAST(SUM(CAST(x AS DECIMAL(18,s))) AS DOUBLE).
-    hi = F.shiftright(ticks, 22)
-    # lo == ticks - hi*2^22 == ticks & (2^22 - 1) exactly (two's-complement
-    # arithmetic shift, negatives included) — the mask form evaluates the
-    # tick tree ONCE instead of twice inside the lo-sum's update path
-    lo = ticks.bitwiseAND(F.lit((1 << 22) - 1))
-    total = (
-        F.sum(hi).cast("decimal(38,0)") * F.lit(1 << 22).cast("decimal(8,0)")
-        + F.sum(lo).cast("decimal(38,0)")
-    )
-    expr = (total / F.lit(10**scale).cast("decimal(7,0)")).cast("double")
-    return expr.alias(out) if out else expr
-
-
 def dec_ticks_sql(x: str, scale: int) -> str:
-    """SQL-string form of ``dec_ticks`` (one parse, zero py4j chatter):
-    the exact integer ticks of ``CAST((x) AS DECIMAL(18,scale))`` as a
-    BIGINT expression over the SQL expression string ``x``. Identical
-    Catalyst tree to ``dec_ticks`` — the shared row-side half of
-    ``dec_sum``/``dec_sum_sql``."""
+    """Exact integer ticks of ``CAST((x) AS DECIMAL(18,scale))`` as a BIGINT
+    SQL expression over the SQL expression string ``x``.
+
+    DuckDB's double→decimal cast goes through the double's SHORTEST
+    DECIMAL REPRESENTATION and rounds half away from zero (double 2.675,
+    binary value 2.67499999999999982, casts to 2.68), which is exactly
+    Spark's ``round(double, s)``; the outer ``rint`` snaps the re-widened
+    double back to the exact integer tick. That repr round costs a
+    BigDecimal per row, and it can only disagree with the cheap
+    ``rint(x * 10^s)`` when the scaled value sits within double noise of a
+    .5 boundary, so only those rows take it. Bit parity with the DuckDB
+    cast over adversarial .xx5/.x05 ties of both signs is pinned by
+    ``tests/test_functions.py``.
+    """
     p = f"{float(10 ** scale)!r}D"
     w = f"(({x}) * {p})"
     near_half = f"abs({w} - FLOOR({w}) - 0.5D) < 1.0E-6D"
@@ -114,95 +43,57 @@ def dec_ticks_sql(x: str, scale: int) -> str:
     )
 
 
-def dec_sum_sql(x: str, scale: int = 2, out: str | None = None) -> F.Column:
-    """``dec_sum`` built from ONE SQL string (``F.expr``) instead of ~25
-    Column-API calls. Py4j charges a round-trip per Column call — a query
-    with seven money sums paid ~2,200 RPCs (~0.2s) of pure
-    plan-construction chatter; one ``expr`` parse is a single RPC and the
-    JVM parses the whole tree at once. The parsed Catalyst expression is
-    IDENTICAL to ``dec_sum``'s (pinned by ``test_functions``' bit-parity
-    test plus the oracle gate over every query that switched), so the
-    cross-engine exactness contract is untouched. ``x`` is a SQL
-    expression string; use this form in hot-path queries, ``dec_sum``
-    when the input is an already-built Column."""
+def tick_sums_sql(ticks: str) -> tuple[str, str]:
+    """The (hi, lo) partial-sum SQL aggregates of a BIGINT tick expression.
+
+    Invariant: ``hi = ticks >> 22`` (arithmetic shift, so floor division
+    for negatives too) and ``lo = ticks & (2^22 - 1)`` in ``[0, 2^22)``
+    satisfy ``ticks == hi * 2^22 + lo`` exactly, so ``tick_total_sql``
+    over the two sums is the exact tick total in any summation order.
+    Both sums are plain long sums that stay compact in hash-agg codegen (a
+    DECIMAL(20,0) accumulator exceeds Spark's 18-digit compact decimal
+    and pays a heap BigDecimal per row). They fit a long while
+    ``rows * |ticks| < 2^85``.
+
+    Decision: ``ticks`` is meant to be a column that a projection below
+    the aggregate computed ONCE. Hash-agg codegen shares no
+    subexpressions across aggregate functions, so passing the
+    ``dec_ticks_sql`` expression itself (what ``dec_sum`` does)
+    evaluates it in both the hi and the lo update paths. Queries that sum
+    several money columns (``engineer_features``, q01, q41) pre-project
+    their ticks and call this and ``tick_total_sql`` directly.
+    """
+    return f"SUM(shiftright({ticks}, 22))", f"SUM(({ticks} & CAST(4194303 AS BIGINT)))"
+
+
+def tick_total_sql(sum_hi: str, sum_lo: str, scale: int) -> str:
+    """Exact DOUBLE value of the hi/lo tick sums (``tick_sums_sql``) at
+    ``scale``: recombined in DECIMAL(38,0), divided exactly by
+    ``10^scale`` and cast once, so the result is bit-identical to
+    ``CAST(SUM(CAST(x AS DECIMAL(18,scale))) AS DOUBLE)``."""
     if scale > 6:
-        raise ValueError(f"dec_sum_sql supports scale <= 6, got {scale}")
-    ticks = dec_ticks_sql(x, scale)
-    hi = f"shiftright({ticks}, 22)"
-    # lo = ticks & (2^22 - 1): exactly ticks - hi*2^22 for arithmetic
-    # shifts (negatives included), with ONE tick-tree evaluation, not two
-    lo = f"({ticks} & CAST(4194303 AS BIGINT))"
-    total = (
-        f"(CAST(SUM({hi}) AS DECIMAL(38,0)) * CAST(4194304 AS DECIMAL(8,0)) "
-        f"+ CAST(SUM({lo}) AS DECIMAL(38,0)))"
-    )
-    c = F.expr(f"CAST(({total} / CAST({10 ** scale} AS DECIMAL(7,0))) AS DOUBLE)")
-    return c.alias(out) if out else c
-
-
-def dec_ticks(col: str | F.Column, scale: int) -> F.Column:
-    """Per-row integer ticks of ``CAST(x AS DECIMAL(18,scale))`` as a long
-    — the row-side half of ``dec_sum``, exposed for operators (salted
-    aggregation) that need to carry exact money through their own
-    multi-stage sums. See ``dec_sum`` for the repr-rounding semantics.
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    w = c * F.lit(float(10**scale))
-    near_half = F.abs(w - F.floor(w) - F.lit(0.5)) < F.lit(1e-6)
+        # the exact division lands on decimal(38,6) after Spark's
+        # precision-loss adjustment; >6 fractional digits would be rounded
+        raise ValueError(f"exact money sums support scale <= 6, got {scale}")
     return (
-        F.when(near_half, F.rint(F.round(c, scale) * F.lit(float(10**scale))))
-        .otherwise(F.rint(w))
-        .cast("long")
+        f"CAST(((CAST({sum_hi} AS DECIMAL(38,0)) * CAST(4194304 AS DECIMAL(8,0)) "
+        f"+ CAST({sum_lo} AS DECIMAL(38,0))) / CAST({10 ** scale} AS DECIMAL(7,0))) "
+        f"AS DOUBLE)"
     )
 
 
-def ticks_hi(ticks: F.Column) -> F.Column:
-    """High 22-bit-shifted slice of a tick column (see dec_sum)."""
-    return F.shiftright(ticks, 22)
+def dec_sum(x: str, scale: int = 2, out: str | None = None) -> F.Column:
+    """Exact money sum of the SQL expression string ``x``, value-identical
+    to ``CAST(SUM(CAST(x AS DECIMAL(18,scale))) AS DOUBLE)`` (what the
+    DuckDB oracles run) in any partition order: decimal integer
+    arithmetic is summation-order-free, where a double sum differs in its
+    low bits between engines and between partition orders.
 
-
-def ticks_lo(ticks: F.Column) -> F.Column:
-    """Low slice: ticks & (2^22 - 1) == ticks - (ticks >> 22)*2^22, in
-    [0, 2^22) — exact for negatives under the arithmetic shift."""
-    return ticks.bitwiseAND(F.lit((1 << 22) - 1))
-
-
-def ticks_total(sum_hi: F.Column, sum_lo: F.Column, scale: int) -> F.Column:
-    """Exact recombination of hi/lo tick sums back to a double value."""
-    total = (
-        sum_hi.cast("decimal(38,0)") * F.lit(1 << 22).cast("decimal(8,0)")
-        + sum_lo.cast("decimal(38,0)")
-    )
-    return (total / F.lit(10**scale).cast("decimal(7,0)")).cast("double")
-
-
-def report_sort(df, *cols):
-    """Globally-sorted final output for a BOUNDED report, without the
-    range-sort tax.
-
-    ``df.orderBy(...)`` plans a range exchange whose partition bounds come
-    from a SAMPLING pass that re-executes the entire child plan — a hidden
-    second job that doubled the wall time of every report-shaped query in
-    the bench (q97: 0.36s → 0.22s, q87: 0.29s → 0.10s at sf0.1). When the
-    result is a bounded report (a histogram, a per-source/per-flag/per-fk
-    summary — ≤ ~10^4 rows at ANY scale factor because the grouping domain
-    is bounded), a single-partition sort is the honest 100 TB plan: one
-    tiny hash exchange of the already-aggregated rows, one in-memory sort,
-    no re-execution. Output rows and their global order are IDENTICAL to
-    ``orderBy``.
-
-    "Bounded" includes dimension-sized grouped reports (per-supplier,
-    per-brand summaries): a totally-ordered result is consumed by a single
-    reader anyway, and sorting a dim-sized aggregate in one task is what
-    every engine (DuckDB included) does with the same query. Fact-sized
-    sorted outputs (full-history exports) must keep ``orderBy`` and pay
-    the range sample.
-
-    Query chains inline the equivalent two-method form
-    ``.repartition(1).sortWithinPartitions(...)`` — grep for that pair;
-    this helper is the documented reference implementation.
+    Built as ONE ``F.expr`` parse: a py4j round-trip per Column call made
+    the Column-API form of the same tree pure plan-construction chatter.
     """
-    return df.repartition(1).sortWithinPartitions(*cols)
+    c = F.expr(tick_total_sql(*tick_sums_sql(dec_ticks_sql(x, scale)), scale))
+    return c.alias(out) if out else c
 
 
 def revenue() -> F.Column:

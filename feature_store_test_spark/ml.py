@@ -48,17 +48,12 @@ class LinearScorer:
         )
 
 
-def train_model(
-    train_df: DataFrame,
-    feature_cols: list[str] | None = None,
-    label_col: str = TARGET,
-) -> PipelineModel:
+def train_model(train_df: DataFrame) -> PipelineModel:
     """VectorAssembler + LinearRegression fit (utils.py:233-258 parity)."""
-    feature_cols = feature_cols or TRAINING_FEATURES
-    assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
-    lr = LinearRegression(featuresCol="features", labelCol=label_col)
+    assembler = VectorAssembler(inputCols=TRAINING_FEATURES, outputCol="features")
+    lr = LinearRegression(featuresCol="features", labelCol=TARGET)
     return Pipeline(stages=[assembler, lr]).fit(
-        train_df.select(*feature_cols, label_col).na.drop()
+        train_df.select(*TRAINING_FEATURES, TARGET).na.drop()
     )
 
 
@@ -70,11 +65,8 @@ def load_model(spark, path: str) -> PipelineModel:
     return PipelineModel.load(path)
 
 
-def score(model: PipelineModel, df: DataFrame, output_col: str = "prediction") -> DataFrame:
-    out = model.transform(df)
-    if output_col != "prediction":
-        out = out.withColumnRenamed("prediction", output_col)
-    return out.drop("features")
+def score(model: PipelineModel, df: DataFrame) -> DataFrame:
+    return model.transform(df).drop("features")
 
 
 def to_linear_scorer(model: PipelineModel) -> LinearScorer:

@@ -21,10 +21,9 @@ Two physical forms, one semantics:
   rows-per-shingle. Holds whenever one document's shingle set fits in a
   row (LLM-corpus docs: ~KBs); measured ~2x faster than the explode form
   at sf0.1.
-- EXPLODE form (``word_shingles``/``minhash_signatures``/
-  ``jaccard_verify``): (doc, shingle) rows + groupBy mins. Unbounded doc
-  sizes, and the shape the shingle-join queries (containment,
-  decontamination) build on.
+- EXPLODE form (``shingle_rows``/``minhash_signatures``): (doc,
+  shingle) rows + groupBy mins. Unbounded doc sizes, and the shape the
+  shingle-join queries (containment, decontamination) build on.
 
 Performance gotchas this module encodes (measured at sf0.1, 5000 docs /
 260k shingles):
@@ -299,28 +298,6 @@ def jaccard_verify_arrays(
     )
 
 
-def word_shingles(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, out: str = "shingle"
-) -> DataFrame:
-    """Distinct n-word shingles per document: (id_col, shingle) rows.
-
-    Docs shorter than n words produce no rows (sequence would otherwise
-    run descending and fabricate shingles).
-    """
-    with_words = df.select(F.col(id_col), F.split(F.col(text_col), " ").alias("__w"))
-    w = F.col("__w")
-    shingles = F.when(
-        F.size(w) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(w) - n),
-            lambda i: F.concat_ws(" ", *[F.element_at(w, i + j + 1) for j in range(n)]),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return with_words.select(
-        F.col(id_col), F.explode(F.array_distinct(shingles)).alias(out)
-    )
-
-
 def minhash_signatures(
     shingles: DataFrame,
     id_col: str,
@@ -552,42 +529,6 @@ def within_group_pairs(
             F.col("p.id_b").alias("id_b"),
             *[v.alias(name) for name, v in values.items()],
         )
-    )
-
-
-def jaccard_verify(
-    shingles: DataFrame,
-    pairs: DataFrame,
-    id_col: str,
-    shingle_col: str = "shingle",
-    threshold: float = 0.0,
-) -> DataFrame:
-    """Exact Jaccard on candidate pairs: |A∩B| / (|A|+|B|-|A∩B|).
-
-    Joins run only over candidate pairs (LSH output), so the quadratic
-    verification cost is bounded by actual near-duplicates, not corpus size.
-    """
-    sizes = shingles.groupBy(id_col).agg(F.count(F.lit(1)).alias("sz"))
-    sa = shingles.select(F.col(id_col).alias("id_a"), F.col(shingle_col))
-    sb = shingles.select(F.col(id_col).alias("id_b"), F.col(shingle_col))
-    inter = (
-        pairs.join(sa, "id_a")
-        .join(sb, ["id_b", shingle_col])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    za = sizes.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"))
-    zb = sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"))
-    # filter on the UNrounded ratio (the oracle's WHERE does too — filtering
-    # on the rounded value would keep a 0.4999996 pair the oracle drops)
-    ratio = F.col("inter").cast("double") / (
-        F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    ).cast("double")
-    return (
-        inter.join(za, "id_a")
-        .join(zb, "id_b")
-        .where(ratio >= threshold)
-        .select("id_a", "id_b", F.round(ratio, 6).alias("jaccard"))
     )
 
 

@@ -7,34 +7,15 @@ nondeterministic pandas ``groupby().agg('last')``
 always defined by an explicit total order (event time + unique tiebreak),
 never by physical row order.
 
-Scale: one hash shuffle on the key; ``row_number`` needs only an
-in-partition sort. At 100 TB prefer feeding this from a table partitioned /
-clustered by the key so the shuffle is avoided entirely.
+Scale: one hash shuffle on the key. At 100 TB prefer feeding this from a
+table partitioned / clustered by the key so the shuffle is avoided
+entirely.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def latest_per_key(
-    df: DataFrame,
-    keys: str | list[str],
-    order_by: list[str | Column],
-) -> DataFrame:
-    """Keep exactly one row per key: the first under ``order_by`` DESC-style spec.
-
-    ``order_by`` should be a total order (include a unique tiebreak column)
-    or the result is nondeterministic by definition.
-    """
-    keys = [keys] if isinstance(keys, str) else list(keys)
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") == 1)
-        .drop("__rn")
-    )
 
 
 def latest_per_key_agg(
@@ -44,12 +25,11 @@ def latest_per_key_agg(
 ) -> DataFrame:
     """Latest-per-key as an AGGREGATION: max_by(whole row, order tuple).
 
-    Same result as the ranking-window form when ``max_of`` is a total
-    order (largest tuple = latest), but executes as a hash aggregate with
-    map-side partial max — the shuffle carries ONE candidate row per key
-    per input partition instead of every row, and no in-partition sort
-    happens. At 100 TB this is the preferred online-view materialization;
-    the window form remains for cases needing ranks beyond #1.
+    Same result as a ``row_number()`` ranking window when ``max_of`` is a
+    total order (largest tuple = latest), but executes as a hash aggregate
+    with map-side partial max — the shuffle carries ONE candidate row per
+    key per input partition instead of every row, and no in-partition sort
+    happens.
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     order_cols = [F.col(c) if isinstance(c, str) else c for c in max_of]

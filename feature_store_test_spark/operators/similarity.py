@@ -1298,64 +1298,27 @@ def pq_encode(
     ).drop("__unit")
 
 
-def _pq_lut(
-    queries: DataFrame,
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Per-query ADC lookup table: LUT[j][c] = ||q_sub_j - centroid_jc||²,
-    built driver-side (queries are request-sized by definition — the same
-    broadcast discipline as cosine_topk) as a (query_id, j, code, d)
-    frame to broadcast-join against exploded corpus codes.
-
-    The query_id field inherits ``id_col``'s type from ``queries``'s
-    schema (not a hardcoded long); a zero-norm query vector skips
-    normalization (distances become ||centroid||² — deterministic finite
-    ranks) instead of crashing on the division."""
-    from pyspark.sql import types as T
-
-    d = len(codebooks[0][0])
-    rows = []
-    for r in queries.select(id_col, vec_col).collect():
-        v = [float(x) for x in r[vec_col]]
-        n = sum(x * x for x in v) ** 0.5
-        qv = [x / n for x in v] if n else v
-        for j, book in enumerate(codebooks):
-            sub = qv[j * d : (j + 1) * d]
-            for c, cent in enumerate(book):
-                dist = sum((a - b) * (a - b) for a, b in zip(sub, cent))
-                rows.append((r[id_col], j, c, dist))
-    schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("j", T.IntegerType()),
-            T.StructField("code", T.IntegerType()),
-            T.StructField("d", T.DoubleType()),
-        ]
-    )
-    from feature_store_test_spark.data import local_rows_df
-
-    return local_rows_df(queries.sparkSession, rows, schema)
-
-
 def _pq_lut_wide(
     queries: DataFrame,
     codebooks: list[list[list[float]]],
     id_col: str,
     vec_col: str,
 ) -> DataFrame:
-    """``_pq_lut`` flattened to ONE row per query: (query_id, __lut) with
-    __lut[j*k + c] = ||q_sub_j - centroid_jc||² in j-major order. Joining
-    this on query_id and folding the m codes against the array in-row
-    replaces the posexplode -> (j, code) join -> re-aggregation pipeline:
+    """Per-query ADC lookup table, ONE row per query: (query_id, __lut)
+    with __lut[j*k + c] = ||q_sub_j - centroid_jc||² in j-major order,
+    built from one local collect of the queries (request-sized by
+    definition — the same broadcast discipline as cosine_topk). Joining this on query_id and
+    folding the m codes against the array in-row replaces a posexplode ->
+    (j, code) join -> re-aggregation pipeline:
     the ADC stage handles one row per (query, candidate) instead of m,
     and the m-way re-grouping shuffle disappears entirely (measured
     q103 13.6s -> ~4s at the 10x point). The fold sums in fixed j order,
     so adist is bit-deterministic regardless of partitioning.
 
-    Same contracts as ``_pq_lut``: query_id inherits ``id_col``'s schema
-    type, and a zero-norm query skips normalization instead of crashing.
+    query_id inherits ``id_col``'s type from ``queries``'s schema (not a
+    hardcoded long), and a zero-norm query vector skips normalization
+    (distances become ||centroid||² — deterministic finite ranks) instead
+    of crashing on the division.
 
     The LUT entries are computed as one vectorized numpy broadcast
     (queries × m × k centroids) instead of a per-entry Python loop — at

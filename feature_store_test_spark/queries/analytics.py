@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from feature_store_test_spark.data import load_table
-from feature_store_test_spark.functions import dec_sum, dec_ticks
+from feature_store_test_spark.functions import dec_sum, dec_ticks_sql
 from feature_store_test_spark.registry import register
 
 
@@ -863,7 +863,7 @@ def q140_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
             "o_orderpriority",
             "o_totalprice",
             "total_qty",
-            dec_ticks(F.col("o_totalprice"), 2).alias("__ticks"),
+            F.expr(dec_ticks_sql("o_totalprice", 2)).alias("__ticks"),
         ).withColumn("__b", F.expr("__ticks div 2000000"))
     )
     qty_c = F.col("total_qty")
@@ -931,7 +931,7 @@ def q141_group_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         "value",
-        dec_ticks(F.col("value"), 2).cast("decimal(20,0)").alias("x"),
+        F.expr(dec_ticks_sql("value", 2)).cast("decimal(20,0)").alias("x"),
     )
     stats = t.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(20,0)").alias("n"),
@@ -1010,7 +1010,7 @@ def q142_group_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"CAST(unix_micros(ts) DIV 1000000 - {_TREND_EPOCH_S} AS DECIMAL(20,0))"
         ).alias("x"),
-        dec_ticks(F.col("value"), 2).cast("decimal(20,0)").alias("y"),
+        F.expr(dec_ticks_sql("value", 2)).cast("decimal(20,0)").alias("y"),
     )
     s = t.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("decimal(20,0)").alias("n"),
@@ -1092,11 +1092,7 @@ def q143_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_hi").cast("bigint").alias("n_clamped_hi"),
         F.min("lo").alias("lo"),
         F.min("hi").alias("hi"),
-        dec_sum(
-            F.when((F.col("is_lo") == 0) & (F.col("is_hi") == 0), F.col("value")),
-            2,
-            "interior_sum",
-        ),
+        dec_sum("CASE WHEN is_lo = 0 AND is_hi = 0 THEN value END", 2, "interior_sum"),
     )
 
 
@@ -1140,7 +1136,7 @@ def q145_decayed_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, "events", sf_dir)
     aged = ev.select(
         "user_id",
-        dec_ticks(F.col("value"), 2).alias("ticks"),
+        F.expr(dec_ticks_sql("value", 2)).alias("ticks"),
         F.datediff(F.lit(_DECAY_ANCHOR).cast("date"), F.col("ts").cast("date")).alias(
             "k"
         ),

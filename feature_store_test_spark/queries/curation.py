@@ -225,7 +225,7 @@ _KANON = 5
 )
 def q146_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from feature_store_test_spark.data import load_table as _plain
-    from feature_store_test_spark.functions import dec_ticks
+    from feature_store_test_spark.functions import dec_ticks_sql
 
     # plain loader: quasi-identifier bucketing is pure column math
     # (A/B 0.16s -> 0.11s without the spread shuffle)
@@ -234,7 +234,7 @@ def q146_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust.select(
             "c_nationkey",
             "c_mktsegment",
-            F.floor(dec_ticks(F.col("c_acctbal"), 2) / F.lit(100000.0))
+            F.floor(F.expr(dec_ticks_sql("c_acctbal", 2)) / F.lit(100000.0))
             .cast("bigint")
             .alias("bal_bucket"),
         )

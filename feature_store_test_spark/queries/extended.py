@@ -8,7 +8,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from feature_store_test_spark.functions import dec_sum
+from feature_store_test_spark.functions import (
+    dec_sum,
+    dec_ticks_sql,
+    tick_sums_sql,
+    tick_total_sql,
+)
 from pyspark.sql import types as T
 
 from feature_store_test_spark.data import load_table, load_table_spread
@@ -365,25 +370,15 @@ def q40_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q41_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     from feature_store_test_spark.operators.skew import detect_hot_keys, salted_agg
 
-    from feature_store_test_spark.functions import (
-        dec_ticks,
-        ticks_hi,
-        ticks_lo,
-        ticks_total,
-    )
-
     li = load_table(spark, "lineitem", sf_dir)
-    # money rides through the salting stages as hi/lo long tick sums
-    # (codegen-compact, exact — see functions.dec_sum); the decimal form
-    # paid a per-row BigDecimal in BOTH stage aggregations. The tick
-    # expression is pre-projected ONCE — hash-agg codegen does not share
-    # subexpressions across the hi and lo aggregate functions (same
-    # finding as q01).
+    # money rides through both salting stages as hi/lo long tick sums,
+    # over ticks pre-projected once (tick_sums_sql)
     pre = li.select(
         "l_suppkey",
         "l_quantity",
-        dec_ticks(F.col("l_extendedprice"), 2).alias("__pt"),
+        F.expr(dec_ticks_sql("l_extendedprice", 2)).alias("__pt"),
     )
+    hi, lo = (F.expr(x) for x in tick_sums_sql("__pt"))
     # ADAPTIVE salting (round 6 — the same cost-based-gate discipline as
     # the dedup exact-collapse): the salted two-stage runs only when the
     # false-positive-free hot-key probe (memoized, operators/skew.py)
@@ -404,8 +399,8 @@ def q41_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             keys=["l_suppkey"],
             aggs={
                 "n_items": ("sum", F.count(F.lit(1))),
-                "__tp_hi": ("sum", F.sum(ticks_hi(F.col("__pt")))),
-                "__tp_lo": ("sum", F.sum(ticks_lo(F.col("__pt")))),
+                "__tp_hi": ("sum", hi),
+                "__tp_lo": ("sum", lo),
                 "max_qty_dec": (
                     "max",
                     F.max(F.col("l_quantity").cast("decimal(18,2)")),
@@ -416,14 +411,14 @@ def q41_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         out = pre.groupBy("l_suppkey").agg(
             F.count(F.lit(1)).alias("n_items"),
-            F.sum(ticks_hi(F.col("__pt"))).alias("__tp_hi"),
-            F.sum(ticks_lo(F.col("__pt"))).alias("__tp_lo"),
+            hi.alias("__tp_hi"),
+            lo.alias("__tp_lo"),
             F.max(F.col("l_quantity").cast("decimal(18,2)")).alias("max_qty_dec"),
         )
     return out.select(
         "l_suppkey",
         "n_items",
-        ticks_total(F.col("__tp_hi"), F.col("__tp_lo"), 2).alias("total_price"),
+        F.expr(tick_total_sql("__tp_hi", "__tp_lo", 2)).alias("total_price"),
         F.col("max_qty_dec").cast("double").alias("max_qty"),
     )
 

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from feature_store_test_spark.data import load_table
 from feature_store_test_spark.functions import dec_sum as _dec_sum
-from feature_store_test_spark.functions import dec_sum_sql as _dec_sum_sql
+from feature_store_test_spark.functions import dec_ticks_sql, tick_sums_sql, tick_total_sql
 from feature_store_test_spark.registry import register
 
 
@@ -52,17 +52,7 @@ from feature_store_test_spark.registry import register
 )
 def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, "lineitem", sf_dir)
-    # The five distinct money measures have their integer ticks computed
-    # ONCE each in a pre-aggregation projection; the aggregate then runs
-    # plain long sums over the hi/lo 22-bit split (see functions.dec_sum
-    # for the exactness argument — identical recombination formula, so
-    # results are bit-identical to the inline dec_sum form). Inline
-    # dec_sum evaluates its tick expression inside BOTH the hi-sum and
-    # lo-sum update paths — hash-agg codegen does not share subexpressions
-    # across aggregate functions, and the doubled CASE/rint work was ~30%
-    # of this query's wall time at sf0.1 (0.36s -> 0.26s measured).
-    from feature_store_test_spark.functions import dec_ticks_sql
-
+    # the five money measures pre-project their ticks once (tick_sums_sql)
     measures = {
         "tq": ("l_quantity", 2),
         "te": ("l_extendedprice", 2),
@@ -70,8 +60,6 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "tc": ("l_extendedprice * (1 - l_discount) * (1 + l_tax)", 6),
         "ti": ("l_discount", 2),
     }
-    # single-parse selectExpr/expr strings throughout: the Column-API form
-    # of this projection cost ~0.12s of eager per-call JVM analysis
     pre = li.where(
         F.col("l_shipdate") <= F.lit("2000-12-31").cast("timestamp")
     ).selectExpr(
@@ -81,21 +69,14 @@ def q01_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     aggs = []
     for name in measures:
-        aggs.append(F.expr(f"SUM(shiftright({name}, 22))").alias(f"{name}_hi"))
-        aggs.append(
-            F.expr(f"SUM({name} & CAST(4194303 AS BIGINT))").alias(f"{name}_lo")
-        )
+        hi, lo = tick_sums_sql(name)
+        aggs += [F.expr(hi).alias(f"{name}_hi"), F.expr(lo).alias(f"{name}_lo")]
     g = pre.groupBy("l_returnflag", "l_linestatus").agg(
         *aggs, F.count(F.lit(1)).alias("count_order")
     )
 
     def total(name: str) -> str:
-        scale = measures[name][1]
-        return (
-            f"CAST(((CAST({name}_hi AS DECIMAL(38,0)) * CAST(4194304 AS DECIMAL(8,0))"
-            f" + CAST({name}_lo AS DECIMAL(38,0)))"
-            f" / CAST({10 ** scale} AS DECIMAL(7,0))) AS DOUBLE)"
-        )
+        return tick_total_sql(f"{name}_hi", f"{name}_lo", measures[name][1])
 
     return g.selectExpr(
         "l_returnflag",
@@ -283,7 +264,7 @@ def q05_local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("n_name")
         .agg(
-            _dec_sum_sql("l_extendedprice * (1 - l_discount)", 4, "revenue"),
+            _dec_sum("l_extendedprice * (1 - l_discount)", 4, "revenue"),
         )
     )
 

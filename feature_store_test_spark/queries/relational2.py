@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from feature_store_test_spark.data import load_table
 from feature_store_test_spark.functions import dec_sum as _dec_sum
-from feature_store_test_spark.functions import dec_sum_sql as _dec_sum_sql
 from feature_store_test_spark.registry import register
 
 
@@ -232,7 +231,7 @@ def q61_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(p), F.col("p_partkey") == F.col("l_partkey"))
         .where(cond)
         .agg(
-            _dec_sum_sql("l_extendedprice * (1 - l_discount)", 4, "revenue"),
+            _dec_sum("l_extendedprice * (1 - l_discount)", 4, "revenue"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )

@@ -29,7 +29,6 @@ from pyspark.sql import functions as F
 
 from feature_store_test_spark.data import load_table
 from feature_store_test_spark.functions import dec_sum as _dec_sum
-from feature_store_test_spark.functions import dec_sum_sql as _dec_sum_sql
 from feature_store_test_spark.functions import revenue as _revenue
 from feature_store_test_spark.registry import register
 
@@ -132,7 +131,7 @@ def q70_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .where(pair)
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(_dec_sum_sql("l_extendedprice * (1 - l_discount)", 4, "revenue"))
+        .agg(_dec_sum("l_extendedprice * (1 - l_discount)", 4, "revenue"))
         .repartition(1).sortWithinPartitions("supp_nation", "cust_nation", "l_year")
     )
 
@@ -314,8 +313,8 @@ def q73_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Bounded at ANY scale factor by arithmetic, not by fixture size:
         # each surviving part holds > 0.2% of the slice total, so at most
         # floor(1/0.002) = 500 rows can qualify no matter how large the
-        # fact tables grow — the report_sort single-task sort is the
-        # honest 100 TB plan here (vs TPC-H Q11's 0.0001/SF fraction,
+        # fact tables grow — a single-task sort (no range-sampling pass
+        # re-executing the child) is the honest 100 TB plan here (vs TPC-H Q11's 0.0001/SF fraction,
         # which is what makes the ORIGINAL query's output SF-constant).
         .repartition(1).sortWithinPartitions(F.col("part_value").desc(), "l_partkey")
     )
@@ -358,7 +357,7 @@ def q74_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1998-04-01").cast("timestamp"))
         )
         .groupBy(F.col("l_suppkey").alias("supplier_no"))
-        .agg(_dec_sum_sql("l_extendedprice * (1 - l_discount)", 4, "total_revenue"))
+        .agg(_dec_sum("l_extendedprice * (1 - l_discount)", 4, "total_revenue"))
     )
     top = rev.agg(F.max("total_revenue").alias("max_rev"))
     return (
@@ -483,8 +482,8 @@ def q76_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # Qualifying orders are a fixed FRACTION of all orders (~0.004%),
         # so the output grows linearly with the fact tables — fact-sized
-        # sorted outputs must pay the range sort (report_sort's own rule);
-        # a single-task sort here would serialize/OOM at large SF.
+        # sorted outputs must pay the range sort; a single-task sort is
+        # only for bounded reports and would serialize/OOM here at large SF.
         .orderBy(F.col("o_totalprice").desc(), "o_orderkey")
     )
 

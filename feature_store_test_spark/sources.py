@@ -6,7 +6,7 @@ carries a declared StructType — no ``inferSchema`` in production paths
 (inference costs an extra pass at scale and drifts silently).
 
 ``read_csv`` covers the reference's historical/inference CSV inputs;
-``read_json``/``read_parquet`` round out the batch formats;
+``read_json`` rounds out the batch formats;
 ``stream_source`` is the streaming twin (same declared schema) feeding the
 inference pipeline, with ``maxFilesPerTrigger`` as the micro-batch sizing
 knob.
@@ -42,10 +42,6 @@ def read_csv(
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).json(path)
-
-
-def read_parquet(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return spark.read.schema(schema).parquet(path)
 
 
 def write_bucketed(

@@ -70,15 +70,14 @@ class FeatureGroup:
         """Every version of every record (append-only history)."""
         return self.table.read(as_of_version)
 
-    def training_dataset(self, columns: list[str] | None = None) -> DataFrame:
+    def training_dataset(self) -> DataFrame:
         """The reference's Athena training query on Spark SQL (§3.2):
         full history, projected and ordered — Q3 semantics preserved
         (no dedup; docstring-vs-behavior quirk resolved in favor of code).
         """
-        cols = columns or [self.key_col, *self.feature_cols]
         view = f"__fg_{self.name}_history"
         self.offline_history().createOrReplaceTempView(view)
-        col_list = ", ".join(cols)
+        col_list = ", ".join([self.key_col, *self.feature_cols])
         return self.spark.sql(
             f"SELECT {col_list} FROM {view} "
             f"ORDER BY {self.key_col}, {self.event_time_col} DESC"

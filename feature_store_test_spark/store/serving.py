@@ -102,15 +102,15 @@ class ServingSession:
         ).cast("bigint")
         return F.pmod(h, F.lit(self.n_shards)) == F.lit(self.shard)
 
-    def refresh(self, force: bool = False) -> bool:
+    def refresh(self) -> bool:
         """Re-snapshot this shard of the online view; True when a new
         snapshot was taken.
 
         Skips the Spark job when the table's commit version is unchanged
-        (the snapshot is already current) unless ``force``.
+        (the snapshot is already current).
         """
         current = self._fg.table.latest_version()
-        if not force and self.version == current:
+        if self.version == current:
             return False
         key = self._fg.key_col
         view = self._fg.online_view(strict_event_time=self._strict)

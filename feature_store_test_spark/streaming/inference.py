@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from feature_store_test_spark.ml import LinearScorer
+from feature_store_test_spark.sources import stream_source
 from feature_store_test_spark.store.feature_group import FeatureGroup
 from feature_store_test_spark.store.table import VersionedParquetTable
 
@@ -69,7 +70,16 @@ _FOLD_OUT_SCHEMA = T.StructType(
         T.StructField("was_new_key", T.BooleanType()),
         # False when strict_event_time dropped a stale event's state update
         T.StructField("applied", T.BooleanType()),
+        # True on the key's last applied event: its *_after values are the
+        # key's final state for this batch
+        T.StructField("final", T.BooleanType()),
     ]
+)
+
+# validation: rows where this SQL predicate is not TRUE go to the DLQ
+_VALID = (
+    "customer_id IS NOT NULL AND purchase_value IS NOT NULL "
+    "AND purchase_timestamp IS NOT NULL"
 )
 
 
@@ -79,11 +89,6 @@ class InferencePipeline:
     feature_group: FeatureGroup
     scorer: LinearScorer
     dlq_path: str
-    # validation hook: rows where this SQL predicate is FALSE go to the DLQ
-    valid_predicate: str = (
-        "customer_id IS NOT NULL AND purchase_value IS NOT NULL "
-        "AND purchase_timestamp IS NOT NULL"
-    )
     # parity mode (False): stale re-deliveries overwrite state in arrival
     # order, reproducing the reference's retry quirk (§2.13 Q5).
     # strict mode (True): MERGE-style guard — an event older than the
@@ -109,6 +114,7 @@ class InferencePipeline:
             exists = bool(pdf["seed_exists"].iloc[0])
             state_ts = pdf["seed_ts"].iloc[0]
             out = []
+            last = None  # index of the last applied event in ``out``
             for r in pdf.itertuples(index=False):
                 v = r.purchase_value
                 if not exists:
@@ -140,15 +146,18 @@ class InferencePipeline:
                     new_avg_pv = (avg_pv + v) / 2.0
                     new_avg_ls = (avg_ls + pred) / 2.0
                 out.append(
-                    (
+                    [
                         r.event_id, r.customer_id, r.purchase_timestamp, v,
                         v, feat_avg_pv, feat_avg_ls, pred,
-                        new_avg_pv, new_avg_ls, not exists, not stale,
-                    )
+                        new_avg_pv, new_avg_ls, not exists, not stale, False,
+                    ]
                 )
                 if not stale:
                     avg_pv, avg_ls, exists = new_avg_pv, new_avg_ls, True
                     state_ts = r.purchase_timestamp
+                    last = len(out) - 1
+            if last is not None:
+                out[last][-1] = True
             return pd.DataFrame(out, columns=[f.name for f in _FOLD_OUT_SCHEMA.fields])
 
         return seeded.groupBy("customer_id").applyInPandas(fold, _FOLD_OUT_SCHEMA)
@@ -157,8 +166,8 @@ class InferencePipeline:
     def process_batch(self, batch: DataFrame, attempt: int = 1) -> DataFrame:
         """Process one micro-batch; returns the per-event prediction log."""
         batch = batch.select(*[f.name for f in EVENT_SCHEMA.fields])
-        ok = batch.where(F.expr(self.valid_predicate))
-        bad = batch.where(~F.expr(f"coalesce({self.valid_predicate}, false)"))
+        ok = batch.where(F.expr(_VALID))
+        bad = batch.where(~F.expr(f"coalesce({_VALID}, false)"))
         if bad.limit(1).count() > 0:
             self.dlq.append(
                 bad.withColumn("attempt", F.lit(attempt)).withColumn(
@@ -181,14 +190,7 @@ class InferencePipeline:
         )
         folded = self._fold_batch(seeded).localCheckpoint(eager=True)
 
-        # final state per key = last event's *_after values
-        from feature_store_test_spark.operators.latest import latest_per_key
-
-        final_state = latest_per_key(
-            folded.where(F.col("applied")),
-            "customer_id",
-            [F.col("purchase_timestamp").desc(), F.col("event_id").desc()],
-        ).select(
+        final_state = folded.where(F.col("final")).select(
             F.col("customer_id"),
             F.col("purchase_timestamp"),
             F.col("purchase_value").alias("latest_purchase_value"),
@@ -220,21 +222,10 @@ class InferencePipeline:
         return self.process_batch(to_retry, attempt=2)
 
     # ---------------------------------------------------------------- stream
-    def run_stream(
-        self,
-        input_dir: str,
-        checkpoint_dir: str,
-        max_files_per_trigger: int | None = None,
-    ) -> None:
+    def run_stream(self, input_dir: str, checkpoint_dir: str) -> None:
         """Structured Streaming replay of a parquet event directory:
         readStream → foreachBatch(process_batch), availableNow (drain all)."""
-        reader = (
-            self.spark.readStream.schema(EVENT_SCHEMA)
-        )
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-        stream = reader.parquet(input_dir)
-
+        stream = stream_source(self.spark, input_dir, EVENT_SCHEMA)
         q = (
             stream.writeStream.foreachBatch(
                 lambda bdf, _bid: self.process_batch(bdf) and None

@@ -407,17 +407,17 @@ def stateful_decayed_spend(events: DataFrame, anchor: str, window_days: int = 30
     not approx). Events outside [0, W] days are dropped by the same
     declared window. State bound: one long per key holds while
     n_key · max_ticks · 2^W < 2^63 (~8.5e3 events/key at $10k values and
-    W=30); past that, split hi/lo like functions.dec_sum — same state
+    W=30); past that, split hi/lo like functions.tick_sums_sql — same state
     shape, two longs.
     """
     from pyspark.sql import functions as F
 
-    from feature_store_test_spark.functions import dec_ticks
+    from feature_store_test_spark.functions import dec_ticks_sql
 
     w = window_days
     aged = events.select(
         "user_id",
-        dec_ticks(F.col("value"), 2).alias("__ticks"),
+        F.expr(dec_ticks_sql("value", 2)).alias("__ticks"),
         F.datediff(F.lit(anchor).cast("date"), F.col("ts").cast("date")).alias("__k"),
     ).where(F.col("__k").between(0, w))
     scaled = aged.select(

@@ -16,7 +16,12 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from feature_store_test_spark.functions import dec_sum
+from feature_store_test_spark.functions import (
+    dec_sum,
+    dec_ticks_sql,
+    tick_sums_sql,
+    tick_total_sql,
+)
 
 ADVERSARIAL = [
     1.115, -1.115, 2.675, -2.675, 0.005, -0.005, 0.125, -0.125,
@@ -24,20 +29,34 @@ ADVERSARIAL = [
 ]
 
 
+def _pre_projected_sum(df):
+    """The shape engineer_features, q01 and q41 use: ticks projected once,
+    the hi/lo partial sums over that column, then the recombination."""
+    hi, lo = tick_sums_sql("t")
+    return (
+        df.selectExpr("i", f"{dec_ticks_sql('x', 2)} AS t")
+        .groupBy("i")
+        .agg(F.expr(hi).alias("hi"), F.expr(lo).alias("lo"))
+        .selectExpr("i", f"{tick_total_sql('hi', 'lo', 2)} AS s")
+    )
+
+
 def test_dec_sum_ticks_match_duckdb_cast_exactly(spark):
     rng = random.Random(20240814)
     vals = ADVERSARIAL + [round(rng.uniform(-1000, 1000), 4) for _ in range(300)]
     df = spark.createDataFrame([(i, v) for i, v in enumerate(vals)], "i long, x double")
-    got = {
-        r["i"]: r["s"]
-        for r in df.groupBy("i").agg(dec_sum("x", scale=2, out="s")).collect()
+    shapes = {
+        "inline": df.groupBy("i").agg(dec_sum("x", scale=2, out="s")),
+        "pre_projected": _pre_projected_sum(df),
     }
     con = duckdb.connect()
-    for i, v in enumerate(vals):
-        want = con.execute(
-            f"SELECT CAST(CAST(CAST({v!r} AS DOUBLE) AS DECIMAL(18,2)) AS DOUBLE)"
-        ).fetchone()[0]
-        assert got[i] == want, (v, got[i], want)
+    for shape, out in shapes.items():
+        got = {r["i"]: r["s"] for r in out.collect()}
+        for i, v in enumerate(vals):
+            want = con.execute(
+                f"SELECT CAST(CAST(CAST({v!r} AS DOUBLE) AS DECIMAL(18,2)) AS DOUBLE)"
+            ).fetchone()[0]
+            assert got[i] == want, (shape, v, got[i], want)
 
 
 def test_dec_sum_is_partition_order_free(spark):

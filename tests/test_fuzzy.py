@@ -67,10 +67,10 @@ def test_skyline_keeps_tied_duplicates_and_matches_naive(spark):
     df = spark.createDataFrame(
         rows, "o_orderpriority string, o_orderkey int, o_totalprice double, total_qty long"
     )
-    from feature_store_test_spark.functions import dec_ticks
+    from feature_store_test_spark.functions import dec_ticks_sql
     from pyspark.sql import Window
 
-    q = df.withColumn("__ticks", dec_ticks(F.col("o_totalprice"), 2))
+    q = df.withColumn("__ticks", F.expr(dec_ticks_sql("o_totalprice", 2)))
     w_strict = (
         Window.partitionBy("o_orderpriority").orderBy("__ticks")
         .rangeBetween(Window.unboundedPreceding, -1)

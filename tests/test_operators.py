@@ -5,14 +5,26 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from feature_store_test_spark.operators.asof import asof_join
-from feature_store_test_spark.operators.latest import latest_per_key
 
 
 def ts(h):
     return dt.datetime(2024, 1, 1, h)
+
+
+def latest_per_key(df, keys, order_by):
+    """Window-form reference for ``latest_per_key_agg``: the first row per
+    key under ``order_by`` (a total order, DESC-style spec)."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    w = Window.partitionBy(*keys).orderBy(*order_by)
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
 
 
 def test_asof_strict_vs_nonstrict_on_equal_timestamps(spark):
@@ -483,10 +495,9 @@ def test_q41_adaptive_salting_paths_agree(spark):
     long tick sums are associative, count is a sum of partial counts,
     max is max — so the adaptive gate can only move cost, never values."""
     from feature_store_test_spark.functions import (
-        dec_ticks,
-        ticks_hi,
-        ticks_lo,
-        ticks_total,
+        dec_ticks_sql,
+        tick_sums_sql,
+        tick_total_sql,
     )
     from feature_store_test_spark.operators.skew import salted_agg
 
@@ -497,18 +508,19 @@ def test_q41_adaptive_salting_paths_agree(spark):
     pre = df.select(
         "l_suppkey",
         "l_quantity",
-        dec_ticks(F.col("l_extendedprice"), 2).alias("__pt"),
+        F.expr(dec_ticks_sql("l_extendedprice", 2)).alias("__pt"),
     )
+    hi, lo = (F.expr(x) for x in tick_sums_sql("__pt"))
     aggs = {
         "n_items": ("sum", F.count(F.lit(1))),
-        "__tp_hi": ("sum", F.sum(ticks_hi(F.col("__pt")))),
-        "__tp_lo": ("sum", F.sum(ticks_lo(F.col("__pt")))),
+        "__tp_hi": ("sum", hi),
+        "__tp_lo": ("sum", lo),
         "max_qty_dec": ("max", F.max(F.col("l_quantity").cast("decimal(18,2)"))),
     }
     final = lambda out: out.select(  # noqa: E731
         "l_suppkey",
         "n_items",
-        ticks_total(F.col("__tp_hi"), F.col("__tp_lo"), 2).alias("total_price"),
+        F.expr(tick_total_sql("__tp_hi", "__tp_lo", 2)).alias("total_price"),
         F.col("max_qty_dec").cast("double").alias("max_qty"),
     )
     salted = {tuple(r) for r in final(salted_agg(pre, ["l_suppkey"], aggs)).collect()}
@@ -517,8 +529,8 @@ def test_q41_adaptive_salting_paths_agree(spark):
         for r in final(
             pre.groupBy("l_suppkey").agg(
                 F.count(F.lit(1)).alias("n_items"),
-                F.sum(ticks_hi(F.col("__pt"))).alias("__tp_hi"),
-                F.sum(ticks_lo(F.col("__pt"))).alias("__tp_lo"),
+                hi.alias("__tp_hi"),
+                lo.alias("__tp_lo"),
                 F.max(F.col("l_quantity").cast("decimal(18,2)")).alias("max_qty_dec"),
             )
         ).collect()

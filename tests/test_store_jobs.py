@@ -88,5 +88,5 @@ def test_store_hot_call_job_counts(spark, tmp_path):
         "merge": 12,
         "refresh_moved": 2,
         "refresh_unmoved": 0,
-        "process_batch": 13,
+        "process_batch": 12,
     }
