@@ -6,24 +6,22 @@ Design for 100 TB:
 - MinHash+LSH: shingle → k minhashes → b bands → bucket group-expand.
   Candidate generation is linear in bucket sizes instead of O(n²);
   verification runs only on candidate pairs.
-- All hashing is md5-based so signatures are deterministic and identical
+- Batch signatures are md5-based so they are deterministic and identical
   across engines — minhash takes the lexicographic MIN over digest
-  windows, which is order-free and shuffle-insensitive.
+  windows, which is order-free and shuffle-insensitive. The streaming
+  near-dup index signs with seeded xxhash64 instead
+  (``minhash_signatures_arrays``): nothing outside Spark reproduces its
+  signatures.
 
-Two physical forms, one semantics:
-- ARRAY form (default, ``shingle_array``/``minhash_near_dups``): each
-  doc's distinct shingle set stays in ONE array column. Signatures are a
-  pure projection (``array_min`` over higher-order transforms — zero
-  shuffles), and exact-Jaccard verification is ``array_intersect`` on a
-  docs-sized table instead of joins over an exploded shingles-sized
-  table. The only shuffles in the whole pipeline are the (band, bucket)
-  grouping and the final pair distinct — both over rows-per-doc, not
-  rows-per-shingle. Holds whenever one document's shingle set fits in a
-  row (LLM-corpus docs: ~KBs); measured ~2x faster than the explode form
-  at sf0.1.
-- EXPLODE form (``shingle_rows``/``minhash_signatures``): (doc,
-  shingle) rows + groupBy mins. Unbounded doc sizes, and the shape the
-  shingle-join queries (containment, decontamination) build on.
+One physical form: each doc's distinct shingle set stays in ONE array
+column (``shingle_array``, or its md5-digest twin ``shingle_digest_array``).
+Signatures are a pure projection (``array_min`` over higher-order
+transforms, zero shuffles), and exact-Jaccard verification is
+``array_intersect`` on a docs-sized table. The only shuffles in the
+whole pipeline are the (band, bucket) grouping and the final pair
+distinct, both over rows-per-doc, not rows-per-shingle. This holds
+whenever one document's shingle set fits in a row (LLM-corpus docs are
+KBs).
 
 Performance gotchas this module encodes (measured at sf0.1, 5000 docs /
 260k shingles):
@@ -35,12 +33,12 @@ Performance gotchas this module encodes (measured at sf0.1, 5000 docs /
   predicate pushdown substitutes the whole array expression into the
   filter and re-evaluates the transform per row — measured 7x slower
   than prefiltering on word count (``shingle_array`` does the latter);
-- the md5 array is materialized as its own projected column so the k
-  window transforms share one digest per shingle (CollapseProject keeps
-  multi-referenced non-cheap aliases unmerged);
+- the self-concatenated digest array is its own projected column
+  (``__h2a``) so the k window transforms share one concat per shingle
+  (CollapseProject keeps multi-referenced non-cheap aliases unmerged);
 - higher-order lambdas run interpreted (no whole-stage codegen), so the
-  md5+window projection (~0.7s per 260k shingles, measured equal in the
-  explode/codegen form) is the array pipeline's intrinsic floor.
+  md5+window projection (~0.7s per 260k shingles) is the pipeline's
+  intrinsic floor.
 """
 
 from __future__ import annotations
@@ -79,62 +77,20 @@ def shingle_array(
     )
 
 
-def shingle_rows(
-    df: DataFrame, id_col: str, text_col: str, n: int = 3, out: str = "shingle"
-) -> DataFrame:
-    """NON-distinct n-word shingles as rows — the SIGNATURE-side feed.
-
-    Min-aggregation is duplicate-insensitive (min over a multiset equals
-    min over its support), so the per-doc ``array_distinct`` pass is
-    skipped, and exploding the position sequence keeps every per-shingle
-    operation — the window concat, the md5, the k substring windows, the
-    min aggregation — inside WHOLE-STAGE CODEGEN: GenerateExec
-    participates in codegen, so ``__w`` stays a loop-local variable (never
-    copied per output row) and no interpreted higher-order lambda runs.
-
-    WHEN TO USE: per-doc shingle counts too large to sit in one array
-    cell (unbounded document sizes — the module docstring's EXPLODE-form
-    criterion); feed the result to ``minhash_signatures``. At bench scale
-    (50-shingle docs) the interpreted array form measured FASTER end to
-    end — string allocation dominates either way and the row form adds a
-    generate + partial-agg shuffle (round-6 A/B, two full-harness runs;
-    see minhash_near_dups) — so bounded-doc pipelines keep the array form.
-
-    Docs shorter than n words are dropped, like ``shingle_array``.
-    """
-    shingle = " || ' ' || ".join(f"__w[__i + {j}]" for j in range(n))
-    return (
-        df.selectExpr(f"`{id_col}`", f"split(`{text_col}`, ' ') AS __w")
-        .where(f"size(__w) >= {n}")
-        .selectExpr(
-            f"`{id_col}`",
-            "__w",
-            f"explode(sequence(0, size(__w) - {n})) AS __i",
-        )
-        .selectExpr(f"`{id_col}`", f"{shingle} AS `{out}`")
-    )
-
-
 def shingle_digest_array(
     df: DataFrame, id_col: str, text_col: str, n: int = 3, out: str = "hs"
 ) -> DataFrame:
     """Distinct md5 DIGESTS of the n-word shingles, one array per doc —
-    the fused md5-family feed (round-6 A/B: 0.55 -> 0.45 on the q21
-    pipeline at sf0.1, interleaved min-of-6).
+    the md5-family feed.
 
-    Fuses what the string form ran as four interpreted array passes
-    (shingle concat, array_distinct on strings, per-element xxhash64
-    fingerprints, per-element md5) into two (md5 INSIDE the shingle
-    transform, distinct on digests): the shingle string is hashed the
-    moment it is built and never materialized into an array, and the
-    digest array serves BOTH downstream consumers — signature windows
-    (identical bits to hashing the distinct strings: min over a multiset
-    equals min over its support, and md5-before-distinct preserves the
-    support) and exact-Jaccard verification (digest-set intersection ==
+    The shingle string is hashed inside the shingle transform, the moment
+    it is built, and never materialized into an array. The digest array
+    serves BOTH downstream consumers: signature windows (identical bits
+    to hashing the distinct strings — min over a multiset equals min over
+    its support, and md5-before-distinct preserves the support) and
+    exact-Jaccard verification (digest-set intersection equals
     shingle-set intersection up to a 128-bit collision INSIDE one pair's
-    union, P < 10^-34 at bench shingle counts — strictly stronger than
-    the 64-bit xxhash64 fingerprints the verify side already used).
-    The engine-portability contract is unchanged: md5(shingle) is exactly
+    union, P < 10^-34 at bench shingle counts). md5(shingle) is exactly
     what the oracle computes.
 
     Docs shorter than n words are dropped, like ``shingle_array``.
@@ -158,11 +114,16 @@ def minhash_signatures_digests(
     k: int = 8,
     keep_cols: list[str] | None = None,
 ) -> DataFrame:
-    """k min-window signature columns from an md5-DIGEST array
-    (``shingle_digest_array`` output): same window family as
-    ``minhash_signatures_arrays`` — member s = lexicographic MIN over the
-    15-hex window at offset ``s * (32 // k)`` of the self-concatenated
-    digest — minus the per-element md5 pass (the digests already exist).
+    """k min-window signature columns (id, mh0..mh{k-1}) from an
+    md5-DIGEST array (``shingle_digest_array`` output).
+
+    The k-hash family is derived from ONE md5 per shingle: member s is
+    the lexicographic MIN over the 15-hex window at offset
+    ``s * (32 // k)`` of the self-concatenated digest. Each window ranks
+    by 60 effectively independent digest bits, so one hash gives k
+    near-independent orderings; q111 audits the estimate error the
+    family produces. Windowing is plain substring, so DuckDB computes
+    the same signatures — the oracle-exact contract.
     """
     if k > 32:
         raise ValueError("digest window family supports k <= 32")
@@ -188,68 +149,24 @@ def minhash_signatures_arrays(
     id_col: str,
     arr_col: str = "shingles",
     k: int = 8,
-    keep_arr: bool = False,
     keep_cols: list[str] | None = None,
-    family: str = "md5",
 ) -> DataFrame:
-    """k min-window signature columns from an array-of-shingles table.
+    """k seeded-xxhash64 minhash columns (id, *keep_cols, mh0..mh{k-1})
+    from an array column: member s = MIN over ``xxhash64(x, s)`` longs.
 
-    ``family="md5"`` (default): same hash family as
-    ``minhash_signatures`` (one md5 per shingle; member s =
-    lexicographic MIN over the 15-hex window at offset s * (32 // k) of
-    the self-concatenated digest) computed as a pure projection:
-    ``array_min`` over per-element transforms — no explode, no shuffle.
-    The md5 array is a separate projected column so the k window
-    transforms share one digest evaluation per shingle. This family is
-    reproducible in any engine with md5/substr, which is what the
-    oracle-exact queries require.
-
-    ``family="xxhash64"``: the documented scale swap — member s =
-    MIN over seeded ``xxhash64(shingle, s)`` longs. The hash itself is
-    far cheaper than md5 (one 64-bit mix vs a cryptographic digest +
-    string windows) and the min-state is a long, not a 15-char string;
-    measured effect on the WHOLE pipeline is modest where other stages
-    dominate (~6% on the sf0.1 direct path, ~20% on the collapsed 10x
-    replica) and grows with shingle volume per doc. The cost is
-    engine-portability of the exact bits: use it when nothing
-    downstream needs to reproduce signatures outside Spark. Candidate
-    quality is statistically equivalent (both are uniform hash
-    families); ``tests/test_operators.py`` pins pipeline agreement on
-    the fixtures.
+    The hash is far cheaper than md5 (one 64-bit mix, a long min-state
+    instead of a 15-char string window), at the cost of engine
+    portability: use it where nothing outside Spark reproduces the
+    signatures (the streaming near-dup index).
     """
-    # selectExpr throughout: each higher-order F.transform lambda costs
-    # several py4j round-trips to build JVM-side, and k signature columns
-    # built through the Column API were ~0.1s of pure RPC chatter per
-    # invocation; one selectExpr parses the same Catalyst tree in a
-    # single call. (SQL lambdas are unary `x -> ...` — the same
-    # (element, index) 2-arg trap documented for F.transform applies.)
-    keep_names = keep_cols if keep_cols is not None else ([arr_col] if keep_arr else [])
-    if family == "xxhash64":
-        return arr_df.selectExpr(
-            f"`{id_col}`",
-            *[f"`{c}`" for c in keep_names],
-            *[
-                f"array_min(transform(`{arr_col}`, x -> xxhash64(x, {s}))) AS mh{s}"
-                for s in range(k)
-            ],
-        )
-    if family != "md5":
-        raise ValueError(f"unknown minhash family {family!r}")
-    if k > 32:
-        raise ValueError("array signature family supports k <= 32")
-    step = 32 // k
-    harr = arr_df.selectExpr(
+    # one selectExpr parse instead of k Column-API transform lambdas, each
+    # of which costs several py4j round-trips to build
+    keep = keep_cols or []
+    return arr_df.selectExpr(
         f"`{id_col}`",
-        *[f"`{c}`" for c in keep_names],
-        # chained transforms: md5 evaluated ONCE per element, then
-        # self-concatenated (concat(md5(x), md5(x)) would hash twice)
-        f"transform(transform(`{arr_col}`, x -> md5(x)), h -> concat(h, h)) AS __h2a",
-    )
-    return harr.selectExpr(
-        f"`{id_col}`",
-        *[f"`{c}`" for c in keep_names],
+        *[f"`{c}`" for c in keep],
         *[
-            f"array_min(transform(__h2a, h -> substring(h, {step * s + 1}, 15))) AS mh{s}"
+            f"array_min(transform(`{arr_col}`, x -> xxhash64(x, {s}))) AS mh{s}"
             for s in range(k)
         ],
     )
@@ -296,67 +213,6 @@ def jaccard_verify_arrays(
         .where(f"{ratio} >= {threshold!r}")
         .selectExpr("id_a", "id_b", f"round({ratio}, 6) AS jaccard")
     )
-
-
-def minhash_signatures(
-    shingles: DataFrame,
-    id_col: str,
-    shingle_col: str = "shingle",
-    k: int = 8,
-    family: str = "md5",
-) -> DataFrame:
-    """Wide k-column minhash signature per doc: (id, mh0..mh{k-1}).
-
-    The k-hash family is derived from ONE md5 per shingle: member s orders
-    shingles by a 15-hex-char window of the digest starting at offset
-    ``s * (32 // k)`` (wrapping past the end via digest self-concat), and
-    takes the lexicographic MIN over those windows. Each window ranks by
-    60 effectively-independent digest bits, giving k near-independent
-    orderings for the cost of one hash; q111 audits the estimate error
-    the family produces. Windowing is plain substring, expressible
-    identically in DuckDB, so signatures stay engine-identical — measured
-    ~30% faster than rotating the full 32-char digest (narrower agg
-    buffers + shorter string compares), and ~4x slower than a
-    non-portable xxhash64 family would be (the price of an oracle-exact
-    contract; swap the hash family behind this function if bit-parity
-    with a second engine stops mattering). One groupBy(doc) with map-side
-    partial min; no row blowup. Falls back to per-seed salted md5 when
-    k > 32 (not enough distinct window offsets).
-
-    ``family="xxhash64"``: member s = MIN over ``xxhash64(shingle, s)``
-    longs — same non-portable scale family as
-    ``minhash_signatures_arrays``; signatures are longs, not hex windows.
-
-    This row form runs every per-shingle op (md5/xxhash64, windows, min)
-    in WHOLE-STAGE CODEGEN — pair it with ``shingle_rows`` for documents
-    too large to hold their shingle set in one array cell; see
-    ``shingle_rows`` for when the array form wins instead.
-    """
-    if family == "xxhash64":
-        return shingles.groupBy(id_col).agg(
-            *[
-                F.min(F.xxhash64(F.col(shingle_col), F.lit(s))).alias(f"mh{s}")
-                for s in range(k)
-            ]
-        )
-    if family != "md5":
-        raise ValueError(f"unknown minhash family {family!r}")
-    if k > 32:
-        aggs = [
-            F.min(
-                F.md5(F.concat_ws("|", F.lit(str(s)), F.col(shingle_col)))
-            ).alias(f"mh{s}")
-            for s in range(k)
-        ]
-        return shingles.groupBy(id_col).agg(*aggs)
-    step = 32 // k
-    h = F.md5(F.col(shingle_col))
-    pre = shingles.select(F.col(id_col), F.concat(h, h).alias("__h2"))
-    aggs = [
-        F.min(F.substring("__h2", step * s + 1, 15)).alias(f"mh{s}")
-        for s in range(k)
-    ]
-    return pre.groupBy(id_col).agg(*aggs)
 
 
 def lsh_candidate_pairs(
@@ -453,10 +309,9 @@ def exact_collapse(
     array) rather than raw text: every downstream stage — signatures,
     banding, verification, Jaccard — is a pure function of the shingle
     set, so set-identical docs are fully interchangeable (a strictly
-    coarser, equally exact key than text identity). Computing the key
-    from the already-built array keeps the pipeline at ONE scan of the
-    corpus (callers persist ``arr_df``); collapsing on text would need a
-    second pass over document bodies.
+    coarser, equally exact key than text identity). The key comes from
+    the already-built array, so no second projection runs over document
+    bodies.
 
     ``groups``: one row per distinct set — (__fp, __rep = min id,
     __ids = sorted member ids); only the (fp, id) pairs shuffle.
@@ -589,153 +444,59 @@ def minhash_near_dups(
     k: int = 8,
     bands: int = 4,
     threshold: float = 0.5,
-    cache_shingles: bool = True,
     collapse: bool | None = None,
-    family: str = "md5",
 ) -> DataFrame:
     """Full near-dup pipeline: shingle → minhash → LSH → exact verify.
 
-    ``family`` selects the signature hash family (see
-    ``minhash_signatures_arrays``): "md5" is engine-portable and what
-    the oracle-checked queries use; "xxhash64" is the cheaper scale
-    path with statistically equivalent candidate quality — verification
-    is exact either way, so a family switch can only move which
-    candidate pairs are CONSIDERED, never emit a wrong Jaccard.
-
-    ARRAY form (module docstring): the per-doc shingle-set table feeds
-    two consumers (signatures + verification), so it is persisted once
-    (MEMORY_AND_DISK — docs-sized rows, spills instead of OOM). The
+    One md5-digest array per doc (``shingle_digest_array``) feeds both
+    the signature windows (``minhash_signatures_digests``, the
+    engine-portable family the oracle reproduces) and exact-Jaccard
+    verification. The array is not persisted: it is a cheap scan-side
+    projection, and recomputing it for its second consumer beat
+    materializing a docs-sized cache at sf0.1, x10 and x100. The
     pipeline's only shuffles are the (band, bucket) grouping and the
-    pair distinct. Pass ``cache_shingles=False`` when the caller already
-    persists the input or runs the pipeline once on a small corpus; for
-    unbounded individual document sizes, compose the EXPLODE-form
-    primitives instead.
+    pair distinct.
 
-    Verification intersects HASH arrays, not shingle strings: md5-family
-    pipelines intersect the 32-hex digest arrays the signatures already
-    derive from (one fused projection serves both consumers — see
-    shingle_digest_array), the xxhash64 family intersects 8-byte long
-    fingerprints. Either way a pair's Jaccard differs from string
-    equality only on a hash collision inside that pair's union (128-bit:
-    P < 10^-34; 64-bit: P ≈ 100²/2⁶⁵ ≈ 3e-16) — the standard
-    fingerprint-equality trade every at-scale dedup makes. When candidate
-    density is high (the 10x replica) the verify joins shuffle pair rows
-    carrying both docs' arrays; hash arrays cut that payload vs raw
-    shingle strings.
+    Verification intersects the digest arrays, not shingle strings, so a
+    pair's Jaccard differs from string equality only on an md5 collision
+    inside that pair's union (P < 10^-34) — the fingerprint-equality
+    trade every at-scale dedup makes.
 
     EXACT-COLLAPSE FIRST (the production ordering: exact dedup before
-    near-dedup): the expensive stages — shingling, signatures, banding,
-    verification — run only on DISTINCT texts; results expand back to
-    original ids through the duplicate-group map. Mathematically
-    equivalent to running on all docs: identical texts have identical
-    signatures, so they always share every bucket (within-group pairs are
-    candidates with exact Jaccard 1.0), and any cross-text candidate/
-    verification outcome is a pure function of the two texts. Cost at 1x
-    (a corpus with no exact dups): one narrow (text-hash, id) shuffle and
-    broadcast-sized joins. Gain on a crawl-shaped corpus (30-50% exact
-    dups; the 10x/100x replicas by construction): the whole pipeline
-    shrinks by the duplication factor — measured 3.4s -> ~1s at 10x,
-    30s -> ~2s at 100x. The group map rides broadcast joins at these
-    sizes; at 100 TB the same shape is a shuffle join on the rep id —
-    exactly the materialize-the-deduped-corpus pass production runs
-    anyway.
+    near-dedup): the expensive stages — signatures, banding,
+    verification — run only on DISTINCT shingle sets; results expand
+    back to original ids through the duplicate-group map. Equivalent to
+    running on all docs: identical sets have identical signatures, so
+    they always share every bucket (within-group pairs are candidates
+    with exact Jaccard 1.0), and any cross-set outcome is a pure
+    function of the two sets. ``collapse=None`` decides per input with
+    ``has_duplicate_sets`` (collapse above 5% duplicate sets), since the
+    group-map stages only pay on a crawl-shaped corpus.
     """
-    from pyspark import StorageLevel
-
-    # md5 family (round 6): the FUSED digest pipeline — md5 evaluated
-    # inside the shingle transform, distinct + exact-verify on the digest
-    # arrays (see shingle_digest_array; interleaved A/B 0.55 -> 0.45 at
-    # sf0.1). xxhash64 family keeps the string-shingle table (its hashes
-    # are seeded per signature member, so no shared digest exists to
-    # fuse). Round-6 A/B note (two full-harness min-merged runs each):
-    # both EXPLODE-based signature rewrites measured SLOWER than the
-    # interpreted array chains — (a) pure-codegen row signatures with
-    # candidate-only verify arrays (+0.23: extra semi-join/broadcast
-    # stages cost more scheduler floor than codegen saves), (b)
-    # signatures via explode-of-the-cache into the codegen row agg
-    # (+0.08: the generate + partial-agg shuffle cancels the window-
-    # transform win). Don't re-run those experiments.
-    if family == "md5":
-        arr0 = shingle_digest_array(df, id_col, text_col, n=n)
-        arr_col = "hs"
-    else:
-        arr0 = shingle_array(df, id_col, text_col, n=n)
-        arr_col = "shingles"
-    # adaptive collapse (``collapse=None``): probe once per input identity
-    # whether duplicate shingle-sets exist; without them the collapsed and
-    # direct pipelines are identical row-for-row, so take the direct form
-    # and skip the group-map stages. The probe runs on the UNpersisted
-    # shingle table (one extra source scan, memoized per input identity) so
-    # the direct path below caches the shingle arrays exactly ONCE — the
-    # previous form persisted both arr0 and the derived arr, doubling the
-    # largest cache in the pipeline.
+    arr0 = shingle_digest_array(df, id_col, text_col, n=n)
     if collapse is None:
-        # cost-based crossover: the group-map stages only pay off when the
-        # pipeline shrinks materially (see has_duplicate_sets docstring)
-        collapse = has_duplicate_sets(arr0, id_col, arr_col, min_frac=0.05)
-
-    def with_fingerprints(base: DataFrame) -> tuple[DataFrame, str]:
-        """(verify table, verify column) per family: digests ARE the
-        fingerprints; string shingles get the xxhash64 long projection."""
-        if family == "md5":
-            return base, "hs"
-        return (
-            base.select(
-                F.col(id_col),
-                F.col("shingles"),
-                F.transform("shingles", lambda x: F.xxhash64(x)).alias("__sh64"),
-            ),
-            "__sh64",
-        )
-
-    def signatures_of(arr: DataFrame) -> DataFrame:
-        if family == "md5":
-            return minhash_signatures_digests(arr, id_col, "hs", k=k)
-        return minhash_signatures_arrays(arr, id_col, k=k, family=family)
-
+        collapse = has_duplicate_sets(arr0, id_col, "hs", min_frac=0.05)
     if not collapse:
-        # Direct path: one cached array table feeds signatures + verify.
-        arr, verify_col = with_fingerprints(arr0)
-        if cache_shingles:
-            arr = arr.persist(StorageLevel.MEMORY_AND_DISK)
-        sigs = signatures_of(arr)
+        sigs = minhash_signatures_digests(arr0, id_col, "hs", k=k)
         pairs = lsh_candidate_pairs(sigs, id_col, k=k, bands=bands)
         return jaccard_verify_arrays(
-            arr, pairs, id_col, arr_col=verify_col, threshold=threshold
+            arr0, pairs, id_col, arr_col="hs", threshold=threshold
         )
-    if cache_shingles:
-        # collapsed path: arr0 feeds both exact_collapse consumers (the
-        # group aggregation and the rep semi join) — one persist each for
-        # arr0 / groups / the rep-only arr, no table cached twice
-        arr0 = arr0.persist(StorageLevel.MEMORY_AND_DISK)
-    groups, reps = exact_collapse(arr0, id_col, arr_col)
-    if cache_shingles:
-        # the group map feeds the rep semi join, both expansion sides and
-        # the within-group explode — persist the (tiny) table or each
-        # consumer re-runs its aggregation
-        groups = groups.persist(StorageLevel.MEMORY_AND_DISK)
-    # the expensive projections — signature windows and (xxhash64 family
-    # only) verify fingerprints — run on representatives only; arr feeds
-    # three consumers (signatures + both verify sides), so persist it too
-    # when caching is on
-    arr, verify_col = with_fingerprints(reps)
-    if cache_shingles:
-        arr = arr.persist(StorageLevel.MEMORY_AND_DISK)
-    sigs = signatures_of(arr)
+    groups, reps = exact_collapse(arr0, id_col, "hs")
+    sigs = minhash_signatures_digests(reps, id_col, "hs", k=k)
     pairs = lsh_candidate_pairs(sigs, id_col, k=k, bands=bands)
     rep_pairs = jaccard_verify_arrays(
-        arr, pairs, id_col, arr_col=verify_col, threshold=threshold
+        reps, pairs, id_col, arr_col="hs", threshold=threshold
     )
-    # expand rep-level results back to original ids: cross-group pairs
-    # inherit the verified rep Jaccard; within-group pairs are exact
-    # duplicates (Jaccard 1.0 by identity — emitted only when 1.0 passes
-    # the threshold, like any other pair), restricted to groups whose rep
-    # survived the >= n-words filter — docs with no shingles are outside
-    # the near-dup universe on both engines.
+    # cross-group pairs inherit the verified rep Jaccard; within-group
+    # pairs are exact duplicates (Jaccard 1.0, emitted only when 1.0
+    # passes the threshold), restricted to groups whose rep survived the
+    # >= n-words filter — docs with no shingles are outside the near-dup
+    # universe on both engines.
     cross = expand_rep_pairs(rep_pairs, groups, ["jaccard"])
     if threshold > 1.0:
         return cross
     within = within_group_pairs(
-        groups, arr.select(id_col), id_col, {"jaccard": F.lit(1.0)}
+        groups, reps.select(id_col), id_col, {"jaccard": F.lit(1.0)}
     )
     return cross.unionByName(within)

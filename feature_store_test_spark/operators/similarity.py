@@ -394,33 +394,27 @@ def threshold_pairs_within_buckets(
     oversize: int = 4096,
     dim: int = 64,
     grid_dims: int = 2,
-    scorer: str = "fold",
 ) -> DataFrame:
     """All (ra < rb) pairs within a bucket whose round(cosine, 6) ≥
-    ``threshold`` — EXACT output (same filter expression either way),
+    ``threshold`` — EXACT output (the same 6-dp filter on both paths),
     with a cost-based plan split: buckets with ≤ ``oversize`` distinct
-    vectors take the direct all-pairs join; oversized buckets route
+    vectors score all pairs directly; oversized buckets route
     through the ε-grid candidate join (``_grid_cell``), cutting the
     candidate count from O(n²) to Σ_cell O(n_cell·n_adjacent) — the same
     skew discipline as operators/dedup.exact_collapse. The bucket-count
     probe is one small aggregation collected driver-side (bucket domains
     are bounded: labels, clusters, shard keys).
 
-    ``scorer``: "fold" scores pairs with the JVM ordered-fold dot
-    product; "arrow" runs each small bucket's all-pairs block through
-    one numpy GEMM inside applyInPandas (the cosine_topk_arrow shape —
-    measured ~2x on the within-label SemDeDup stage, and the gap widens
-    with bucket size). Same 6-dp rounded contract; GEMM accumulation
-    ulps are absorbed by the round exactly as in q123, and the oversized-
-    bucket grid path stays fold-based either way (its candidates are
-    sparse, not blocks).
+    Small buckets score their all-pairs block through one numpy GEMM
+    inside applyInPandas (the cosine_topk_arrow shape); the oversized-
+    bucket grid path scores its sparse candidates with the JVM
+    ordered-fold dot product. Same 6-dp rounded contract on both paths:
+    GEMM accumulation ulps are absorbed by the round exactly as in q123.
 
     Output: (ra, rb, cos_sim, {keep}_a, {keep}_b)."""
-    if scorer not in ("fold", "arrow"):
-        raise ValueError(f"unknown scorer {scorer!r}")
     keep = list(keep_cols)
 
-    def side(base: DataFrame, tag: str, cell: bool = False) -> DataFrame:
+    def side(base: DataFrame, tag: str) -> DataFrame:
         cols = [
             F.col(bucket_col),
             F.col(rep_col).alias(f"r{tag}"),
@@ -430,11 +424,7 @@ def threshold_pairs_within_buckets(
             # evaluate BOTH norm folds for every candidate pair — same
             # bits (identical fold, evaluated earlier), 3x less fold work
             l2_norm(vec_col).alias(f"n{tag}"),
-            *(
-                [_grid_cells(vec_col, threshold, dim, grid_dims).alias(f"cell_{tag}")]
-                if cell
-                else []
-            ),
+            _grid_cells(vec_col, threshold, dim, grid_dims).alias(f"cell_{tag}"),
             *[F.col(k).alias(f"{k}_{tag}") for k in keep],
         ]
         return base.select(*cols)
@@ -448,16 +438,7 @@ def threshold_pairs_within_buckets(
         *[f"{k}_a" for k in keep], *[f"{k}_b" for k in keep],
     ]
 
-    def all_pairs_fold(base: DataFrame) -> DataFrame:
-        return (
-            side(base, "a")
-            .join(side(base, "b"), bucket_col)
-            .where(F.col("ra") < F.col("rb"))
-            .where(sim >= threshold)
-            .select(*out_cols)
-        )
-
-    def all_pairs_arrow(base: DataFrame) -> DataFrame:
+    def all_pairs(base: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
@@ -502,8 +483,6 @@ def threshold_pairs_within_buckets(
             bucket_col
         ).applyInPandas(lambda _, pdf: block(pdf), out_schema)
 
-    all_pairs = all_pairs_arrow if scorer == "arrow" else all_pairs_fold
-
     # oversized-bucket probe: one small agg, memoized like ANN training —
     # a pure function of the input data, so bench loops / serving
     # sessions pay the scan once per plan. semanticHash collisions /
@@ -534,10 +513,10 @@ def threshold_pairs_within_buckets(
         F.array(*[F.element_at(F.col("cell_a"), i + 1) + F.lit(d) for i, d in enumerate(offs)])
         for offs in itertools.product((-1, 0, 1), repeat=grid_dims)
     ]
-    probes = side(big_g, "a", cell=True).select(
+    probes = side(big_g, "a").select(
         "*", F.explode(F.array(*combos)).alias("__probe")
     )
-    b = side(big_g, "b", cell=True)
+    b = side(big_g, "b")
     grid = (
         probes.join(
             b,
@@ -1245,57 +1224,49 @@ def pq_encode(
     out_col: str = "codes",
 ) -> DataFrame:
     """Assign each row its m-byte PQ code: per subspace, the index of the
-    nearest codebook centroid. Pure JVM expressions — the codebook rides
-    in as ONE literal array-of-arrays per subspace and a single
-    ``transform`` lambda computes all k distances (a compact plan, not
-    m·k unrolled folds; Catalyst's subexpression elimination shares the
-    duplicated argmin reference). The normalized vector materializes once
-    per row. argmin = position of the array minimum; ties pick the first
-    index — deterministic.
-    """
-    import math
+    nearest codebook centroid to the L2-normalized vector. Rows keep all
+    columns; ``out_col`` is an array<int> of m indices.
 
+    The codebooks ride to executors as numpy arrays inside a
+    ``mapInPandas`` closure, so the plan size stays constant at any
+    codebook size, and the output is a plain column downstream operators
+    cannot re-substitute during optimization. Each Arrow batch computes
+    all subspace argmins vectorized (O(batch·k·d) numpy per subspace, no
+    per-row Python). argmin breaks ties at the first index. A zero
+    vector skips normalization (distances become ||centroid||², like
+    ``_pq_lut_wide``'s zero-norm queries): its code is the per-subspace
+    smallest-norm centroid, never NaN.
+    """
+    import numpy as np
+
+    from pyspark.sql import types as T
+
+    m = len(codebooks)
     d = len(codebooks[0][0])
-    # generated-SQL hygiene (ADVICE r10): out_col is backtick-quoted like
-    # vec_col, and non-finite codebook values are rejected up front — a
-    # repr'd nan/inf literal would fail the SQL parse far from its source
-    if any(
-        not math.isfinite(x) for book in codebooks for c in book for x in c
-    ):
-        raise ValueError("pq_encode: codebooks contain non-finite values")
-    # nullif: zero-vector ANSI guard (see cosine()); a zero vector gets a
-    # NULL unit array, NULL distances, and the deterministic first-index
-    # argmin code — present in the index, never a crash.
-    # Single-parse selectExpr strings (round 10, the r6 fusion playbook):
-    # the identical expression tree built through per-book Column calls
-    # cost ~1.4s of eager analysis per plan build (8 books x nested
-    # transform/zip_with trees) vs one SQL parse; execution unchanged
-    # (same transform/aggregate lambdas, codes verified identical).
-    norm = (
-        f"sqrt(aggregate(`{vec_col}`, 0D, "
-        "(acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
+    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
+    out_schema = T.StructType(
+        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
     )
-    out = df.selectExpr(
-        "*",
-        f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE) / nullif({norm}, 0D))"
-        " AS __unit",
-    )
-    code_exprs = []
-    for j, book in enumerate(codebooks):
-        lit_book = ", ".join(
-            "array(" + ", ".join(f"{float(x)!r}D" for x in c) + ")" for c in book
-        )
-        dists = (
-            f"transform(array({lit_book}), cent -> "
-            f"aggregate(zip_with(slice(__unit, {j * d + 1}, {d}), cent, "
-            "(x, y) -> (x - y) * (x - y)), 0D, (acc, v) -> acc + v))"
-        )
-        code_exprs.append(
-            f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)"
-        )
-    return out.selectExpr(
-        "*", f"array({', '.join(code_exprs)}) AS `{out_col}`"
-    ).drop("__unit")
+
+    def encode(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            if len(pdf):
+                V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
+                norms = np.linalg.norm(V, axis=1, keepdims=True)
+                norms[norms == 0.0] = 1.0
+                V = V / norms
+                codes = np.empty((len(V), m), dtype=np.int64)
+                for j in range(m):
+                    S = V[:, j * d : (j + 1) * d]
+                    d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
+                    codes[:, j] = d2.argmin(axis=1)
+                pdf[out_col] = [c.tolist() for c in codes]
+            else:
+                pdf[out_col] = []
+            yield pdf
+
+    return df.mapInPandas(encode, out_schema)
 
 
 def _pq_lut_wide(
@@ -1392,21 +1363,16 @@ def pq_ann_topk(
        floats).
     2. Per query, a lookup table LUT[j][c] = ||q_sub_j - centroid_jc||²
        is built driver-side (queries are request-sized by definition —
-       the same broadcast discipline as cosine_topk) and shipped as a
-       broadcast (query_id, j, code, d) frame.
-    3. ADC score = Σ_j LUT[j][code_j], computed relationally: posexplode
-       the codes, broadcast-join the LUT, partial-agg the sum — map-side
-       combinable, no Python, no per-row driver work.
+       the same broadcast discipline as cosine_topk) and shipped as ONE
+       broadcast row per query, (query_id, __lut) with the m·k entries
+       in j-major order (``_pq_lut_wide``).
+    3. ADC score = Σ_j LUT[j][code_j], folded in-row over the m codes
+       (``_adc_fold``): one row per (query, candidate), no explode, no
+       re-grouping shuffle, no Python.
     4. The ADC top-``n_candidates`` per query are rescored with exact
        full-dimension cosine; output schema matches cosine_topk.
     """
-    # Arrow-form encode: the expression form's codes column is a large
-    # expression tree that downstream operators (posexplode -> join ->
-    # window) re-substitute during optimization — measured ~70s of pure
-    # driver-side analysis for the composed plan even at m*k=128. The
-    # mapInPandas encoder is a substitution barrier (downstream sees a
-    # plain column) with constant plan size at any codebook size.
-    codes = pq_encode_arrow(corpus, codebooks, vec_col).select(
+    codes = pq_encode(corpus, codebooks, vec_col).select(
         F.col(id_col).alias("neighbor_id"), "codes"
     )
     lut = _pq_lut_wide(queries, codebooks, id_col, vec_col)
@@ -1449,16 +1415,15 @@ def ivfpq_ann_topk(
        partitioned by cid);
     2. each query probes its ``n_probe`` nearest cells; only members of
        probed cells are ADC-scored (the join is cid-equi, THEN the
-       broadcast LUT join on (query_id, j, code) — no all-pairs stage);
+       broadcast per-query LUT row joins on query_id and ``_adc_fold``
+       sums the m lookups in-row — no all-pairs stage);
     3. ADC top-``n_candidates`` rescore with exact full-dim cosine.
 
     Output schema matches cosine_topk; self-matches are kept (rank 1 ==
     the query itself when it is in the corpus), mirroring pq_ann_topk.
     """
     ca = ivf_assign(corpus, centroids, id_col, vec_col, 1, round_dp)
-    # Arrow-form encode — see pq_ann_topk: a plan-substitution barrier
-    # that keeps composed-plan analysis cost constant in codebook size
-    codes = pq_encode_arrow(
+    codes = pq_encode(
         ca.select(
             F.col("__id").alias("neighbor_id"),
             F.col("__v").alias(vec_col),
@@ -1489,54 +1454,3 @@ def ivfpq_ann_topk(
         .select("query_id", "neighbor_id")
     )
     return _exact_rescore(cands, queries, corpus, id_col, vec_col, k, round_dp)
-
-
-def pq_encode_arrow(
-    df: DataFrame,
-    codebooks: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out_col: str = "codes",
-) -> DataFrame:
-    """``pq_encode`` scale path for large ``m*k``: the expression form
-    plants m·k centroid literals in the plan, and analyzer cost grows with
-    the codebook (fine at 8×16, painful at 64×256). This variant ships the
-    codebooks to executors as numpy arrays inside a ``mapInPandas``
-    closure — plan size stays CONSTANT regardless of codebook size, and
-    each Arrow batch computes all subspace argmins vectorized
-    (O(batch·k·d) numpy per subspace, no per-row Python).
-
-    Same contract as ``pq_encode``: rows keep all columns, ``out_col`` is
-    an array<int> of m nearest-centroid indices over the L2-normalized
-    vector; numpy argmin breaks ties at the first index like
-    ``array_position(array_min)``. Codes can differ from the expression
-    path only on last-ulp distance ties (different float summation
-    order); ``tests/test_similarity.py`` pins equality on the fixtures.
-    """
-    import numpy as np
-
-    from pyspark.sql import types as T
-
-    m = len(codebooks)
-    d = len(codebooks[0][0])
-    books = [np.asarray(b, dtype=np.float64) for b in codebooks]
-    out_schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out_col, T.ArrayType(T.IntegerType()))]
-    )
-
-    def encode(batches):
-        for pdf in batches:
-            pdf = pdf.copy()
-            if len(pdf):
-                V = np.asarray(pdf[vec_col].tolist(), dtype=np.float64)
-                V = V / np.linalg.norm(V, axis=1, keepdims=True)
-                codes = np.empty((len(V), m), dtype=np.int64)
-                for j in range(m):
-                    S = V[:, j * d : (j + 1) * d]
-                    d2 = ((S[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                    codes[:, j] = d2.argmin(axis=1)
-                pdf[out_col] = [c.tolist() for c in codes]
-            else:
-                pdf[out_col] = []
-            yield pdf
-
-    return df.mapInPandas(encode, out_schema)

@@ -371,6 +371,17 @@ def q100_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _q105_ck_hint(sf_dir: str) -> str:
+    """q105's orders⋈customer join hint: small orders (floor-bound
+    regime, < 8 MB) take the in-job SHUFFLE_HASH, larger corpora keep the
+    customer broadcast — which is also the 100 TB plan."""
+    from feature_store_test_spark.data import _table_bytes
+
+    if _table_bytes(f"{sf_dir}/orders.parquet") < 8 * 1024 * 1024:
+        return "SHUFFLE_HASH(c)"
+    return "BROADCAST(c)"
+
+
 # ---------------------------------------------------------------------------
 # Q105 — referential-integrity audit: orphan counts for every declared
 # foreign key, in one pass per relationship (left-anti join → count).
@@ -444,17 +455,12 @@ def q105_referential_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (4 -> 3) — but at the 10x replica the broadcast measured BETTER
     # (x10 min 1.03 vs 1.20: there the orders shuffle is real bytes while
     # the 150k-row customer dim broadcasts for pennies). The hint is
-    # therefore SIZE-GATED like the other cost-based plan splits: small
-    # orders (floor-bound regime, < 8 MB) take the in-job SHJ, larger
-    # corpora keep the dim broadcast — which is also the 100 TB plan.
-    from feature_store_test_spark.data import _table_bytes, register_temp_views
+    # therefore SIZE-GATED like the other cost-based plan splits (see
+    # _q105_ck_hint).
+    from feature_store_test_spark.data import register_temp_views
 
     register_temp_views(spark, sf_dir)
-    ck_hint = (
-        "SHUFFLE_HASH(c)"
-        if _table_bytes(f"{sf_dir}/orders.parquet") < 8 * 1024 * 1024
-        else "BROADCAST(c)"
-    )
+    ck_hint = _q105_ck_hint(sf_dir)
     return spark.sql(
         f"""
         WITH per_order AS (
@@ -832,24 +838,11 @@ def q137_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("window", "skyline", "join"),
 )
 def q140_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Two-phase skyline CASCADE (round 11, r10 verdict item 3): the
-    # declared window key (o_orderpriority, 5 values) capped the whole
-    # skyline at 5-way parallelism — 4.6x wall growth for 10x data.
-    # Phase 1 splits each priority into fixed-width PRICE-TICK buckets
-    # (__b = __ticks div 2e6; the tick DOMAIN is bounded by order size,
-    # not corpus size, so ~30 buckets x 5 priorities at any SF) and runs
-    # the same two RANGE frames per (priority, bucket): rows dominated
-    # WITHIN their bucket are dropped. 2-D dominance is transitive, so
-    # the locally-non-dominated rows are a DOMINATING SET — any globally
-    # dominated row is dominated by some phase-1 survivor — and phase 2
-    # re-runs the ORIGINAL 5-partition window on the (few) survivors
-    # only. Exact same output; the data-sized sort now runs at bucket
-    # width and the declared-key window sorts a skyline-sized frame.
-    # Rejected intermediate (A/B'd): managed_cache + per-bucket running-
-    # max join-back — won x1 (0.28 vs 0.43) but LOST x10 (2.46 vs 1.87,
-    # the 1.5M-row cache write/read); this cascade needs no cache and no
-    # join. Keyed spread on lineitem per q78's rationale (the qty agg is
-    # orderkey-keyed).
+    # One dominance pass partitioned by the declared key, o_orderpriority
+    # (5 values, so the window runs at most 5-way parallel). A phase-1
+    # pass over (priority, price bucket) that pre-drops locally dominated
+    # rows measured a wash at x1 and x10, so it is not kept. Keyed spread
+    # on lineitem per q78's rationale (the qty agg is orderkey-keyed).
     from feature_store_test_spark.data import load_table_spread
 
     orders = load_table(spark, "orders", sf_dir)
@@ -857,38 +850,30 @@ def q140_pareto_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     qty = li.groupBy("l_orderkey").agg(
         F.sum(F.col("l_quantity").cast("long")).alias("total_qty")
     )
-    q = (
-        orders.join(qty, orders["o_orderkey"] == qty["l_orderkey"]).select(
-            "o_orderkey",
-            "o_orderpriority",
-            "o_totalprice",
-            "total_qty",
-            F.expr(dec_ticks_sql("o_totalprice", 2)).alias("__ticks"),
-        ).withColumn("__b", F.expr("__ticks div 2000000"))
+    q = orders.join(qty, orders["o_orderkey"] == qty["l_orderkey"]).select(
+        "o_orderkey",
+        "o_orderpriority",
+        "o_totalprice",
+        "total_qty",
+        F.expr(dec_ticks_sql("o_totalprice", 2)).alias("__ticks"),
     )
     qty_c = F.col("total_qty")
-
-    def dominated(partition_cols: list[str]) -> F.Column:
-        w_strict = (
-            Window.partitionBy(*partition_cols)
-            .orderBy("__ticks")
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        w_incl = (
-            Window.partitionBy(*partition_cols)
-            .orderBy("__ticks")
-            .rangeBetween(Window.unboundedPreceding, 0)
-        )
-        return (
-            F.coalesce(F.max(qty_c).over(w_strict), F.lit(-1)) >= qty_c
-        ) | (F.max(qty_c).over(w_incl) > qty_c)
-
-    survivors = q.withColumn(
-        "__dom1", dominated(["o_orderpriority", "__b"])
-    ).where(~F.col("__dom1"))
+    w_strict = (
+        Window.partitionBy("o_orderpriority")
+        .orderBy("__ticks")
+        .rangeBetween(Window.unboundedPreceding, -1)
+    )
+    w_incl = (
+        Window.partitionBy("o_orderpriority")
+        .orderBy("__ticks")
+        .rangeBetween(Window.unboundedPreceding, 0)
+    )
+    dominated = (
+        F.coalesce(F.max(qty_c).over(w_strict), F.lit(-1)) >= qty_c
+    ) | (F.max(qty_c).over(w_incl) > qty_c)
     return (
-        survivors.withColumn("__dom2", dominated(["o_orderpriority"]))
-        .where(~F.col("__dom2"))
+        q.withColumn("__dom", dominated)
+        .where(~F.col("__dom"))
         .select("o_orderpriority", "o_orderkey", "o_totalprice", "total_qty")
     )
 

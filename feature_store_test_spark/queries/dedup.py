@@ -109,7 +109,7 @@ _JACCARD_T = 0.5
     hashes AS (
       -- k-hash family = one md5, member s = the 15-hex window of the
       -- digest at offset s * (32//k), wrapping via self-concat (must stay
-      -- in lockstep with operators/dedup.py minhash_signatures)
+      -- in lockstep with operators/dedup.py minhash_signatures_digests)
       SELECT doc_id, seed,
              MIN(substr(h || h, {32 // _MINHASH_K} * seed + 1, 15)) AS minhash
       FROM hashed, unnest(generate_series(0, {_MINHASH_K - 1})) AS s(seed)
@@ -145,19 +145,9 @@ _JACCARD_T = 0.5
 )
 def q21_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    # cache_shingles=False (round 7, A/B'd at THREE scales): the digest
-    # array is a cheap scan-side md5 projection, and the exact-collapse
-    # pass shrinks high-dup corpora before it runs — recomputing it for
-    # the second consumer beat materializing a docs-sized cache at every
-    # point measured (sf0.1 0.46→0.28, x10 0.82→0.53, x100 1.79→1.43,
-    # interleaved min-of-N). The uncached plan is also cache-binding-free,
-    # so prepared-plan re-execution applies to it like any other query.
-    # The flag stays for compositions whose shingle projection is genuinely
-    # expensive (normalization-heavy or python-stage inputs).
     return minhash_near_dups(
         docs, "doc_id", "text",
         n=3, k=_MINHASH_K, bands=_MINHASH_BANDS, threshold=_JACCARD_T,
-        cache_shingles=False,
     )
 
 
@@ -750,7 +740,7 @@ def q110_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes AS (
       -- k-hash family = one md5, member s = the 15-hex window of the
       -- digest at offset s * (32//k), wrapping via self-concat (must stay
-      -- in lockstep with operators/dedup.py minhash_signatures)
+      -- in lockstep with operators/dedup.py minhash_signatures_digests)
       SELECT doc_id, seed,
              MIN(substr(h || h, {32 // _MINHASH_K} * seed + 1, 15)) AS minhash
       FROM hashed, unnest(generate_series(0, {_MINHASH_K - 1})) AS s(seed)

@@ -427,7 +427,7 @@ def q102_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     long_docs = docs.where(F.size("toks") >= 8)
 
     def grams_of(df: DataFrame) -> DataFrame:
-        # codegen 8-gram rows (shingle_rows precedent): explode the START
+        # codegen 8-gram rows: explode the START
         # POSITIONS and build the gram by direct ||-concatenation — the
         # whole chain (generate, concat, the downstream hash join + agg)
         # stays in whole-stage codegen, where the previous

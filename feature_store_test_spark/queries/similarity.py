@@ -429,7 +429,7 @@ def q121_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_set("vec_id")).alias("__ids"),
     ))
     rep_edges = threshold_pairs_within_buckets(
-        g, "label", "embedding", "__rep", 0.25, scorer="arrow",
+        g, "label", "embedding", "__rep", 0.25
     ).select(F.col("ra").alias("id_a"), F.col("rb").alias("id_b"))
     comps = connected_components(rep_edges, "id_a", "id_b")
     # ids inherit their group's component when the group is internally

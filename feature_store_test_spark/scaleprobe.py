@@ -18,12 +18,11 @@ from __future__ import annotations
 
 import json
 import os
-import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from feature_store_test_spark.data import SCHEMAS, load_table
+from feature_store_test_spark.data import DEFAULT_SF_DIR, SCHEMAS, load_table
 
 BASE_SF = "/root/testdata/sf0.1"
 # Replication factor is env-tunable for one-off deeper probes
@@ -148,39 +147,28 @@ def ensure_replica(spark: SparkSession) -> str:
 
 
 def main() -> None:
-    from feature_store_test_spark.registry import all_queries
+    from feature_store_test_spark.registry import all_queries, persistent_rdd_ids
     from feature_store_test_spark.session import get_spark
+    from feature_store_test_spark.sweep import bench_module, cold_min
 
-    spark = get_spark(
-        app_name="fsts-scaleprobe",
-        extra_conf={
-            "spark.sql.files.maxPartitionBytes": "16m",
-            "spark.sql.files.openCostInBytes": "512k",
-        },
-    )
+    spark = get_spark(app_name="fsts-scaleprobe")
+    bench = bench_module()
+    bench.set_profile(spark, bench.BASE_PROFILE)
     ensure_replica(spark)
 
     specs = all_queries()
+    baseline_rdds = persistent_rdd_ids(spark)
     report: dict[str, dict[str, float]] = {}
     for name in PROBED:
         fn = specs[name].fn
-        # one warmup (plan/codegen) at the smallest SF, then cold-cache
-        # single runs at 1x and 10x — the same protocol bench.py uses
-        fn(spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
-        times = {}
-        for label, d in [("x1", BASE_SF), (f"x{COPIES}", OUT_DIR)]:
-            # min-of-two cold runs, same rationale as bench.py: a shared
-            # 32-thread JVM occasionally drops a multi-second GC pause
-            # into a single-shot measurement
-            runs = []
-            for _ in range(2):
-                spark.catalog.clearCache()
-                t0 = time.perf_counter()
-                fn(spark, d).write.format("noop").mode("overwrite").save()
-                runs.append(time.perf_counter() - t0)
-            times[label] = round(min(runs), 3)
+        # one warmup (plan/codegen) at the smallest SF, then min-of-2
+        # cold runs: x1 under the bench BASE profile, the replica under
+        # the SCALE profile — the sweep's protocol
+        bench.set_profile(spark, bench.BASE_PROFILE)
+        cold_min(spark, fn, DEFAULT_SF_DIR, baseline_rdds, n_runs=1)
+        times = {"x1": round(cold_min(spark, fn, BASE_SF, baseline_rdds), 3)}
+        bench.set_profile(spark, bench.SCALE_PROFILE)
+        times[f"x{COPIES}"] = round(cold_min(spark, fn, OUT_DIR, baseline_rdds), 3)
         times["ratio"] = round(times[f"x{COPIES}"] / times["x1"], 2)
         report[name] = times
         print(json.dumps({name: times}))
@@ -213,7 +201,8 @@ def main() -> None:
             "note": (
                 f"{len(report)}-query probe at 100x replica "
                 "(SPARK_GRAFT_SCALE_COPIES=100); x1 under bench BASE "
-                "profile; min-of-2 cold runs. 100x data at "
+                "profile, x100 under bench SCALE profile; min-of-2 cold "
+                "runs. 100x data at "
                 f"{round(totaln / total1, 2)}x wall "
                 f"(x1 {round(total1, 2)}s -> x100 {round(totaln, 2)}s)."
             ),

@@ -33,7 +33,7 @@ from feature_store_test_spark.operators.similarity import (
     cosine,
     ivf_assign,
     ivf_train,
-    pq_encode_arrow,
+    pq_encode,
     pq_train,
 )
 
@@ -77,7 +77,7 @@ class ANNIndex:
         assigned = ivf_assign(corpus, cents, id_col, vec_col, 1).select(
             F.col("__id").alias(id_col), F.col("__v").alias(vec_col), "cid"
         )
-        coded = pq_encode_arrow(assigned, books, vec_col)
+        coded = pq_encode(assigned, books, vec_col)
         coded.write.mode("overwrite").partitionBy("cid").parquet(f"{path}/codes")
         cent_rows = [
             {"cid": r["cid"], "cv": list(r["cv"])} for r in cents.collect()

@@ -228,14 +228,15 @@ class VersionedParquetTable:
         reader enumerating the log sees the whole commit or none of it. An
         append (no ``type`` field) is blind: on a lost publish race the
         SAME files are re-committed under the next free version (bounded
-        retries). A compact commit is pinned to its ``base_version``, so a
-        lost race means its snapshot is stale and it aborts.
+        retries), their unpublished data dir renamed first, because
+        ``_scan`` reads each row's ``_commit_version`` from that name. A
+        compact commit is pinned to its ``base_version``, so a lost race
+        means its snapshot is stale and it aborts.
         """
         is_append = "type" not in fields
         os.makedirs(self._log_path, exist_ok=True)
-        data_dir = os.path.join(
-            self.path, _DATA_DIR, f"v{version:010d}-{uuid.uuid4().hex[:8]}"
-        )
+        suffix = uuid.uuid4().hex[:8]
+        data_dir = os.path.join(self.path, _DATA_DIR, f"v{version:010d}-{suffix}")
         writer = df.write.mode("errorifexists")
         if self.partition_cols:
             writer = writer.partitionBy(*self.partition_cols)
@@ -257,7 +258,14 @@ class VersionedParquetTable:
             except ConcurrentCommitError:
                 if not is_append:
                     raise
+            old = os.path.basename(body["data_dir"])
             version = (self.latest_version() or 0) + 1
+            new = f"v{version:010d}-{suffix}"
+            new_dir = os.path.join(self.path, _DATA_DIR, new)
+            os.rename(body["data_dir"], new_dir)
+            body["data_dir"] = new_dir
+            for f in body["files"]:
+                f["path"] = f["path"].replace(f"/{old}/", f"/{new}/", 1)
         raise ConcurrentCommitError(
             f"append to {self.path} lost 16 publish races in a row"
         )

@@ -93,7 +93,6 @@ class NearDupIngest:
             arr_col="__sh64",
             k=self.k,
             keep_cols=["__sh64"],
-            family="xxhash64",
         )
 
     def process_batch(self, batch: DataFrame) -> DataFrame:

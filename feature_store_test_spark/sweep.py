@@ -20,37 +20,51 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
+
+_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def bench_module():
+    """``bench.py`` (repo root, outside the package): the one home of the
+    BASE/SCALE profile literals that sweep and scaleprobe time under."""
+    if _REPO_ROOT not in sys.path:
+        sys.path.insert(0, _REPO_ROOT)
+    import bench
+
+    return bench
+
+
+def cold_min(spark, fn, data_dir: str, baseline_rdds: set[int], n_runs: int = 2) -> float:
+    """Min-of-``n_runs`` cold-cache wall seconds of ``fn(spark, data_dir)``
+    drained through a noop write. Every cache a run leaves behind
+    (DataFrame caches, managed caches, RDDs persisted since
+    ``baseline_rdds``) is released before the next run, and the min
+    drops the odd multi-second GC pause a single shot absorbs from the
+    preceding queries' garbage."""
+    from feature_store_test_spark.registry import release_caches, release_new_rdds
+
+    runs = []
+    for _ in range(n_runs):
+        t0 = time.perf_counter()
+        fn(spark, data_dir).write.format("noop").mode("overwrite").save()
+        runs.append(time.perf_counter() - t0)
+        spark.catalog.clearCache()
+        release_caches()
+        release_new_rdds(spark, baseline_rdds)
+    return min(runs)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from feature_store_test_spark.registry import (
-        all_queries,
-        persistent_rdd_ids,
-        release_caches,
-        release_new_rdds,
-    )
+    from feature_store_test_spark.registry import all_queries, persistent_rdd_ids
     from feature_store_test_spark.session import get_spark
 
-    # File-split confs are owned by bench's profiles (set via _set_profile
-    # below before any timing) — no extra_conf here, so the values can't
-    # drift from bench.BASE_PROFILE (r9 ADVICE: a dead 16m/512k copy under
-    # a 'same as bench' comment contradicted the single-source cleanup).
+    # file-split confs are owned by bench's profiles, set before any
+    # timing, so no extra_conf here
     spark = get_spark(app_name="fsts-sweep")
-
-    # the EXACT bench profiles (round 9: this module had drifted to a
-    # stale 8-partition copy of a pre-r5 base profile — profile literals
-    # now live in ONE place, bench.py, imported here and by plans.py)
-    import sys as _sys
-
-    _sys.path.insert(
-        0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    from bench import BASE_PROFILE, SCALE_PROFILE, profile_desc, set_profile
-
-    def _set_profile(*profile) -> None:
-        set_profile(spark, profile)
+    bench = bench_module()
 
     with_10x = os.environ.get("SPARK_GRAFT_SWEEP_SKIP_10X", "0") != "1"
     scale_dir = None
@@ -63,24 +77,13 @@ def main() -> None:
     baseline_rdds = persistent_rdd_ids(spark)
 
     def run_once(name: str, data_dir: str) -> float:
-        t0 = time.perf_counter()
-        specs[name].fn(spark, data_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        release_caches()
-        release_new_rdds(spark, baseline_rdds)
-        return dt
+        return cold_min(spark, specs[name].fn, data_dir, baseline_rdds, n_runs=1)
 
-    def run_timed(name: str, data_dir: str, n_runs: int = 2) -> float:
-        # min-of-N cold-cache runs, the same protocol as bench.py: a
-        # single shot on a shared 32-thread JVM occasionally absorbs a
-        # multi-second GC pause from the preceding queries' garbage
-        return min(run_once(name, data_dir) for _ in range(n_runs))
+    def run_timed(name: str, data_dir: str) -> float:
+        return cold_min(spark, specs[name].fn, data_dir, baseline_rdds)
 
     out: dict[str, dict] = {}
-    _set_profile(*BASE_PROFILE)
+    bench.set_profile(spark, bench.BASE_PROFILE)
     # warm every query's JVM/codegen path at the smallest SF so the first
     # timed queries don't absorb cold-start JIT (without this, whichever
     # query runs first reads 5-8x slower than steady state)
@@ -100,7 +103,7 @@ def main() -> None:
     if with_10x and scale_dir:
         spark.sparkContext._jvm.System.gc()
         time.sleep(2.0)
-        _set_profile(*SCALE_PROFILE)
+        bench.set_profile(spark, bench.SCALE_PROFILE)
         for name in specs:
             if "err" in out[name]:
                 continue
@@ -117,12 +120,9 @@ def main() -> None:
                 out[name]["ratio"] = round(t / max(out[name]["x1"], 1e-9), 2)
             except Exception as e:  # noqa: BLE001
                 out[name]["err"] = str(e)[:200]
-        _set_profile(*BASE_PROFILE)
+        bench.set_profile(spark, bench.BASE_PROFILE)
 
-    path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "SCALE_SWEEP.json",
-    )
+    path = os.path.join(_REPO_ROOT, "SCALE_SWEEP.json")
     x1_tot = sum(v.get("x1", 0.0) for v in out.values())
     x10_tot = sum(v.get("x10", 0.0) for v in out.values())
     result: dict[str, dict] = {
@@ -134,9 +134,9 @@ def main() -> None:
             "protocol": (
                 "min-of-2 cold-cache runs after an sf0.001 warmup pass; "
                 f"x1 = sf0.1 under bench.BASE_PROFILE "
-                f"({profile_desc(BASE_PROFILE)}), x10 = scaleprobe "
+                f"({bench.profile_desc(bench.BASE_PROFILE)}), x10 = scaleprobe "
                 f"replica under bench.SCALE_PROFILE "
-                f"({profile_desc(SCALE_PROFILE)})"
+                f"({bench.profile_desc(bench.SCALE_PROFILE)})"
             ),
         }
     }

@@ -163,19 +163,39 @@ def test_q102_eval_grams_broadcast_and_no_python(spark, sf_dir):
     assert "Python" not in plan
 
 
-def test_q105_small_parents_broadcast_anti_joins(spark, sf_dir):
+def test_q105_small_parents_broadcast_anti_joins(spark, sf_dir, monkeypatch):
     """The FK audit's LINEITEM-side dimension checks run as broadcast
     LEFT joins feeding null-counts (never a shuffle of lineitem against a
     dimension table); the orders probe is the one real shuffle and must
-    scan lineitem exactly once (round-5 fused single-pass form). The
-    orders⋈customer branch is deliberately SHUFFLE_HASH since round 11
-    (a broadcast build is its own scheduler job; the branch shuffles
-    orders' two key columns, not lineitem — time-wash, 4 jobs -> 3)."""
-    plan = plan_of(spark, sf_dir, "q105_referential_audit")
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert plan.count("lineitem.parquet") == 1, plan
-    assert plan.count("ShuffledHashJoin") >= 2  # orders probe + ck branch
-    assert "Python" not in plan
+    scan lineitem exactly once. The orders⋈customer branch follows q105's
+    size gate: SHUFFLE_HASH below it, a customer broadcast above it. The
+    expected join counts come from that same gate, checked on both sides
+    (the far side by reporting the fixture's orders as 8 MB)."""
+    from feature_store_test_spark import data
+    from feature_store_test_spark.queries.analytics import _q105_ck_hint
+
+    real_bytes = data._table_bytes
+
+    def big_orders(path):
+        if path.endswith("/orders.parquet"):
+            return 8 * 1024 * 1024
+        return real_bytes(path)
+
+    hints = []
+    for patched in (False, True):
+        if patched:
+            monkeypatch.setattr(data, "_table_bytes", big_orders)
+        hint = _q105_ck_hint(sf_dir)
+        hints.append(hint)
+        ck_shuffles = hint == "SHUFFLE_HASH(c)"
+        plan = plan_of(spark, sf_dir, "q105_referential_audit")
+        assert plan.count("lineitem.parquet") == 1, plan
+        # part + supplier broadcasts, plus customer above the gate
+        assert plan.count("BroadcastHashJoin") == (2 if ck_shuffles else 3), plan
+        # the orders probe, plus the customer branch below the gate
+        assert plan.count("ShuffledHashJoin") == (2 if ck_shuffles else 1), plan
+        assert "Python" not in plan
+    assert hints == ["SHUFFLE_HASH(c)", "BROADCAST(c)"]
 
 
 def test_q110_fused_single_scan_no_join(spark, sf_dir):

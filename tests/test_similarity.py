@@ -272,25 +272,74 @@ def test_ivfpq_recall_self_match_and_candidate_discipline(spark, sf_dir):
         assert cell_of[n] in probed[q], (q, n)
 
 
+def _nearest_centroid_codes(vec, codebooks):
+    """Reference PQ code in plain Python: L2-normalize (a zero vector
+    stays as is), then per subspace the first index of the minimum
+    squared distance. Sums run left to right from 0.0."""
+    import math
+
+    d = len(codebooks[0][0])
+    norm = 0.0
+    for x in vec:
+        norm += float(x) * float(x)
+    norm = math.sqrt(norm)
+    unit = [float(x) / norm if norm else float(x) for x in vec]
+    codes = []
+    for j, book in enumerate(codebooks):
+        sub = unit[j * d : (j + 1) * d]
+        dists = []
+        for cent in book:
+            acc = 0.0
+            for x, y in zip(sub, cent):
+                acc += (x - y) * (x - y)
+            dists.append(acc)
+        codes.append(dists.index(min(dists)))
+    return codes
+
+
 def test_pq_encode_arrow_matches_expression_path(spark, sf_dir):
-    """The mapInPandas PQ encoder (constant plan size, for large m*k) must
-    assign the same codes as the expression-tree encoder on the fixture
-    embeddings — same normalization, same argmin tie rule."""
-    from feature_store_test_spark.operators.similarity import (
-        pq_encode,
-        pq_encode_arrow,
-        pq_train,
-    )
+    """The mapInPandas PQ encoder must assign the same codes as a plain
+    nearest-centroid reference on the fixture embeddings — same
+    normalization, same first-index argmin tie rule."""
+    from feature_store_test_spark.operators.similarity import pq_encode, pq_train
 
     emb = load_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     books = pq_train(emb, m=8, k=16, seed=7, sample_size=500)
-    expr = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, books).collect()}
-    arrow = {
-        r["vec_id"]: list(r["codes"]) for r in pq_encode_arrow(emb, books).collect()
+    got = {r["vec_id"]: list(r["codes"]) for r in pq_encode(emb, books).collect()}
+    want = {
+        r["vec_id"]: _nearest_centroid_codes(r["embedding"], books)
+        for r in emb.collect()
     }
-    assert expr == arrow
+    assert got == want and len(want) > 0
     # every code is a valid centroid index
-    assert all(0 <= c < 16 for codes in arrow.values() for c in codes)
+    assert all(0 <= c < 16 for codes in got.values() for c in codes)
+
+
+def test_pq_encode_zero_vector_takes_nearest_centroid(spark):
+    """A zero vector has no direction to normalize: it keeps its zero
+    coordinates and takes the centroid nearest the origin — here index 1
+    in both subspaces, never a NaN distance that falls to index 0."""
+    from pyspark.sql import types as T
+
+    from feature_store_test_spark.operators.similarity import pq_encode
+
+    books = [
+        [[1.0, 0.0], [0.1, 0.0]],
+        [[0.0, -1.0], [0.0, 0.2]],
+    ]
+    schema = T.StructType([
+        T.StructField("vec_id", T.LongType()),
+        T.StructField("embedding", T.ArrayType(T.FloatType())),
+    ])
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0, 0.0]), (1, [3.0, 0.0, 0.0, -4.0])], schema
+    )
+    got = {r["vec_id"]: list(r["codes"]) for r in pq_encode(df, books).collect()}
+    assert got == {0: [1, 1], 1: [0, 0]}
+    assert got == {
+        r["vec_id"]: _nearest_centroid_codes(r["embedding"], books)
+        for r in df.collect()
+    }
 
 
 def test_train_memoization(spark, sf_dir):
@@ -470,9 +519,10 @@ def test_threshold_pairs_grid_path_exact_and_subquadratic(spark):
 
 def test_threshold_pairs_arrow_scorer_matches_fold(spark):
     """The GEMM (applyInPandas) all-pairs scorer must emit the same rows
-    and 6-dp values as the fold scorer — on clustered synthetic buckets
-    AND on the real embeddings fixture with payload columns riding
-    through."""
+    and 6-dp values as the JVM fold scorer — on clustered synthetic
+    buckets AND on the real embeddings fixture with payload columns
+    riding through. ``oversize=0`` routes every bucket through the
+    ε-grid path, which scores its candidates with the fold."""
     import numpy as np
     from pyspark.sql import types as T
 
@@ -491,10 +541,10 @@ def test_threshold_pairs_arrow_scorer_matches_fold(spark):
         T.StructField("vec", T.ArrayType(T.FloatType())),
     ])
     g = spark.createDataFrame(rows, schema)
-    fold = S.threshold_pairs_within_buckets(g, "label", "vec", "rep", 0.9, dim=8)
-    arrow = S.threshold_pairs_within_buckets(
-        g, "label", "vec", "rep", 0.9, dim=8, scorer="arrow"
+    fold = S.threshold_pairs_within_buckets(
+        g, "label", "vec", "rep", 0.9, dim=8, oversize=0
     )
+    arrow = S.threshold_pairs_within_buckets(g, "label", "vec", "rep", 0.9, dim=8)
     f = sorted(map(tuple, fold.collect()))
     a = sorted(map(tuple, arrow.collect()))
     assert f == a and len(f) > 50
@@ -504,15 +554,16 @@ def test_threshold_pairs_arrow_scorer_matches_fold(spark):
         F.min("vec_id").alias("__rep"),
         F.array_sort(F.collect_set("vec_id")).alias("__ids"),
     )
-    for sc in ("fold", "arrow"):
+    for oversize in (0, 4096):
         got = S.threshold_pairs_within_buckets(
-            ge, "label", "embedding", "__rep", 0.25, keep_cols=("__ids",), scorer=sc
+            ge, "label", "embedding", "__rep", 0.25, keep_cols=("__ids",),
+            oversize=oversize,
         )
         rows_sc = sorted(
             (r["ra"], r["rb"], r["cos_sim"], tuple(r["__ids_a"]), tuple(r["__ids_b"]))
             for r in got.collect()
         )
-        if sc == "fold":
+        if oversize == 0:
             want = rows_sc
         else:
             assert rows_sc == want and len(want) > 0

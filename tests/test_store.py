@@ -705,6 +705,13 @@ def test_concurrent_append_publish_race_retries_to_next_version(spark, tmp_path)
     got = {r.x for r in t.read().collect()}
     assert got == {1, 2, 99}  # nobody's commit was clobbered
     assert t.versions() == [1, 2, 3]
+    # the retried rows read back under the version they were published
+    # as, not the one the racer took
+    got_versions = {r.x: r._commit_version for r in t.read().collect()}
+    assert got_versions == {1: 1, 99: 2, 2: 3}
+    # the stats-pruned read lists the retried commit's files by path
+    pruned = t.read(where=[("x", "=", 2)]).collect()
+    assert [(r.x, r._commit_version) for r in pruned] == [(2, 3)]
 
 
 def test_compact_aborts_on_publish_race(spark, tmp_path):
